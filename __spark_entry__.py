@@ -24,7 +24,6 @@ from dice_spark.functions.textstats import (
     token_count,
 )
 from dice_spark.operators.assembly import assemble_windows, split_turns, windowed_turns
-from dice_spark.operators.canonicalize import canonicalize_mentions
 from dice_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -34,6 +33,7 @@ from dice_spark.operators.dedup import (
 from dice_spark.operators.extraction import extract_triples_udf, triples_to_propositions
 from dice_spark.operators.projection import classify_projection, project_edges
 from dice_spark.operators.similarity import brute_force_topk
+from dice_spark.pipeline import canonicalize, resolve_ids, triple_mentions
 from dice_spark.streaming.incremental import triggered_windows
 from dice_spark.synth import relations_df, transcripts_from_events
 
@@ -51,34 +51,15 @@ def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_triples_udf(windowed_turns(_transcripts(spark, sf_dir)))
 
 
-def _mentions(triples: DataFrame) -> DataFrame:
-    return triples.select(
-        F.col("subj_span").alias("span"), F.col("subj_type").alias("entity_type")
-    ).unionByName(
-        triples.select(F.col("obj_span").alias("span"), F.col("obj_type").alias("entity_type"))
-    )
+def _classify(triples: DataFrame, mapping: DataFrame) -> DataFrame:
+    props = resolve_ids(triples_to_propositions(triples, CTX), mapping)
+    return classify_projection(props, relations_df(triples.sparkSession))
 
 
 def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    props = triples_to_propositions(triples, CTX)
-    _, mapping = canonicalize_mentions(_mentions(triples), CTX)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"), F.col("resolved_id").alias("subj_id")
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"), F.col("resolved_id").alias("obj_id")
-    )
-    props = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-    )
-    return classify_projection(props, relations_df(spark))
+    _, mapping, _ = canonicalize(triples, CTX)
+    return _classify(triples, mapping)
 
 
 # --- queries ---------------------------------------------------------------------
@@ -172,7 +153,7 @@ def q_memory_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    entities, _ = canonicalize_mentions(_mentions(_triples(spark, sf_dir)), CTX)
+    entities, _, _ = canonicalize(_triples(spark, sf_dir), CTX)
     return entities.select("entity_id", "canonical_name", "entity_type", "n_mentions")
 
 
@@ -509,25 +490,9 @@ def q_prop_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tr = _transcripts(spark, sf_dir)
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    props = triples_to_propositions(triples, CTX)
-    entities, mapping = canonicalize_mentions(_mentions(triples), CTX)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"), F.col("resolved_id").alias("subj_id")
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"), F.col("resolved_id").alias("obj_id")
-    )
-    props = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-        # read by the times join, both prop_entities unions and the query
-        .localCheckpoint(eager=False)
-    )
+    entities, mapping, _ = canonicalize(triples, CTX)
+    # read by the times join, both prop_entities unions and the query
+    props = resolve_ids(triples_to_propositions(triples, CTX), mapping).localCheckpoint(eager=False)
     times = (
         triples.join(tr.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"])
         .groupBy(F.col("sentence").alias("text"))
@@ -576,8 +541,7 @@ def q_linking_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     VECTOR/BAKEOFF for reordered multi-word names no string tier catches)."""
     from dice_spark.operators.linking import resolution_counters, resolve_against_entities
 
-    triples = _triples(spark, sf_dir)
-    entities, _ = canonicalize_mentions(_mentions(triples), CTX)
+    entities, _, _ = canonicalize(_triples(spark, sf_dir), CTX)
     registry = entities.select("entity_id", "canonical_name", "entity_type").localCheckpoint(
         eager=True
     )
@@ -703,26 +667,10 @@ def q_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dice_spark.operators.consolidation import abstraction_pass
 
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    props = triples_to_propositions(triples, CTX)
-    _, mapping = canonicalize_mentions(_mentions(triples), CTX)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"), F.col("resolved_id").alias("subj_id")
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"), F.col("resolved_id").alias("obj_id")
-    )
-    props = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-        # the mention relation reads this twice and the abstraction pass's
-        # level/eligibility/superseded/unchanged branches several more times
-        .localCheckpoint(eager=False)
-    )
+    _, mapping, _ = canonicalize(triples, CTX)
+    # the mention relation reads this twice and the abstraction pass's
+    # level/eligibility/superseded/unchanged branches several more times
+    props = resolve_ids(triples_to_propositions(triples, CTX), mapping).localCheckpoint(eager=False)
     prop_entities = (
         props.select("prop_id", F.col("subj_id").alias("resolved_id"))
         .unionByName(props.select("prop_id", F.col("obj_id").alias("resolved_id")))
@@ -803,7 +751,7 @@ def q_known_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-id hex prefix."""
     from dice_spark.operators.linking import known_entity_fast_path
 
-    entities, _ = canonicalize_mentions(_mentions(_triples(spark, sf_dir)), CTX)
+    entities, _, _ = canonicalize(_triples(spark, sf_dir), CTX)
     registry = entities.select(
         "entity_id", "canonical_name", "entity_type"
     ).localCheckpoint(eager=True)
@@ -877,7 +825,6 @@ def q_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine vs the query text) plus graph tier 1 (props mentioning entities
     within 2 hops of the Alice Nguyen entity, minus the vector hits, sentinel
     score). Exercises the GRAPH_WALK machinery and the tiered merge."""
-    from dice_spark.operators.projection import project_edges
     from dice_spark.operators.router import DiscoveryQuery, retrieve
 
     c = _classified(spark, sf_dir).localCheckpoint(eager=False)
@@ -923,32 +870,10 @@ def q_reconciler(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dice_spark.operators.projection import reconcile_edges
 
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    _, mapping = canonicalize_mentions(_mentions(triples), CTX)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"),
-        F.col("resolved_id").alias("subj_id"),
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"),
-        F.col("resolved_id").alias("obj_id"),
-    )
-
-    def edges_of(t: DataFrame) -> DataFrame:
-        props = (
-            triples_to_propositions(t, CTX)
-            .withColumn("_sk", norm_key("subj_span"))
-            .withColumn("_st", F.lower("subj_type"))
-            .withColumn("_ok", norm_key("obj_span"))
-            .withColumn("_ot", F.lower("obj_type"))
-            .join(subj_map, ["_sk", "_st"], "left")
-            .join(obj_map, ["_ok", "_ot"], "left")
-            .drop("_sk", "_st", "_ok", "_ot")
-        )
-        return project_edges(classify_projection(props, relations_df(t.sparkSession)))
-
+    _, mapping, _ = canonicalize(triples, CTX)
     last = F.substring("conv_id", -1, 1)
-    existing = edges_of(triples.filter(last != "1"))
-    batch = edges_of(triples.filter(last == "1"))
+    existing = project_edges(_classify(triples.filter(last != "1"), mapping))
+    batch = project_edges(_classify(triples.filter(last == "1"), mapping))
     return reconcile_edges(batch, existing).select(
         "edge_ref", "edge_type", "confidence", "lifecycle"
     )
@@ -966,34 +891,13 @@ def q_kg_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dice_spark.operators.delta import compute_delta
 
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    entities_all, mapping = canonicalize_mentions(_mentions(triples), CTX)
+    entities_all, mapping, _ = canonicalize(triples, CTX)
     entities_all = entities_all.localCheckpoint(eager=False)
     mapping = mapping.localCheckpoint(eager=False)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"),
-        F.col("resolved_id").alias("subj_id"),
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"),
-        F.col("resolved_id").alias("obj_id"),
-    )
-
-    def edges_of(t: DataFrame) -> DataFrame:
-        props = (
-            triples_to_propositions(t, CTX)
-            .withColumn("_sk", norm_key("subj_span"))
-            .withColumn("_st", F.lower("subj_type"))
-            .withColumn("_ok", norm_key("obj_span"))
-            .withColumn("_ot", F.lower("obj_type"))
-            .join(subj_map, ["_sk", "_st"], "left")
-            .join(obj_map, ["_ok", "_ot"], "left")
-            .drop("_sk", "_st", "_ok", "_ot")
-        )
-        return project_edges(classify_projection(props, relations_df(t.sparkSession)))
 
     def side_entities(t: DataFrame) -> DataFrame:
         ids = (
-            _mentions(t)
+            triple_mentions(t)
             .select(norm_key("span").alias("norm_key"), F.lower("entity_type").alias("type_key"))
             .distinct()
             .join(mapping, ["norm_key", "type_key"])
@@ -1008,9 +912,9 @@ def q_kg_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = compute_delta(
         chunks=batch_t.select("chunk_id"),
         entities=side_entities(batch_t),
-        edges=edges_of(batch_t),
+        edges=project_edges(_classify(batch_t, mapping)),
         existing_entities=side_entities(store_t),
-        existing_edges=edges_of(store_t),
+        existing_edges=project_edges(_classify(store_t, mapping)),
     )
     null_s = F.lit(None).cast("string")
     return (
@@ -1049,27 +953,9 @@ def q_edge_descriptions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    entities, mapping = canonicalize_mentions(_mentions(triples), CTX)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"),
-        F.col("resolved_id").alias("subj_id"),
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"),
-        F.col("resolved_id").alias("obj_id"),
-    )
-    props = (
-        triples_to_propositions(triples, CTX)
-        .withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-        # read by the edge projection AND the synthesis request join
-        .localCheckpoint(eager=False)
-    )
+    entities, mapping, _ = canonicalize(triples, CTX)
+    # read by the edge projection AND the synthesis request join
+    props = resolve_ids(triples_to_propositions(triples, CTX), mapping).localCheckpoint(eager=False)
     edges = project_edges(classify_projection(props, relations_df(spark)))
     out = synthesize_descriptions(synthesis_requests(edges, props, entities))
     return out.select(
@@ -1374,27 +1260,9 @@ def q_oracle_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and mapping — a second full pipeline per bench run, value-identical
     # but twice the work).
     triples = _triples(spark, sf_dir).localCheckpoint(eager=False)
-    props = triples_to_propositions(triples, CTX)
-    entities, mapping = canonicalize_mentions(_mentions(triples), CTX)
+    entities, mapping, _ = canonicalize(triples, CTX)
     entities = entities.localCheckpoint(eager=False)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"),
-        F.col("resolved_id").alias("subj_id"),
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"),
-        F.col("resolved_id").alias("obj_id"),
-    )
-    props = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-    )
-    c = classify_projection(props, relations_df(spark)).localCheckpoint(eager=False)
+    c = _classify(triples, mapping).localCheckpoint(eager=False)
     edges = project_edges(c).localCheckpoint(eager=False)
 
     relations = [r[0] for r in RELATIONS] + ["is allergic to"]

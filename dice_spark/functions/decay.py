@@ -63,17 +63,3 @@ def effective_confidence(
         .when(vf.isNotNull(), conf * factor(vf))
         .otherwise(conf * factor(cr))
     )
-
-
-def duckdb_effective_confidence_sql(
-    confidence: str = "confidence",
-    decay: str = "decay",
-    as_of: str = "as_of",
-    content_revised: str = "content_revised",
-    k: float = DECAY_K,
-) -> str:
-    """DuckDB rendering of the no-temporal-metadata branch (the common case)."""
-    age = (
-        f"greatest(floor((epoch({as_of}) - epoch({content_revised})) / 86400), 0)"
-    )
-    return f"({confidence} * exp(-{decay} * {k} * {age}))"

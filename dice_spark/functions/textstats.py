@@ -28,18 +28,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish proxy: count of word pieces + digits + punctuation runs.
-
-    Matches the common regex pre-tokenizer shape (word | number | non-space
-    punct run) — a deterministic stand-in for a real tokenizer.
-    """
-    return F.regexp_count(
-        F.col(text) if isinstance(text, str) else text,
-        F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]+"),
-    )
-
-
 def _stopword_hits(text: Column, words: list[str]) -> Column:
     toks = tokens(text)
     wl = F.array(*[F.lit(w) for w in words])

@@ -394,28 +394,3 @@ def dream_loop(
             .withColumn("pass", F.lit("decay_sweep"))
         )
     return result
-
-
-def session_consolidation_pass(
-    session_props: DataFrame,
-    longterm_props: DataFrame,
-    session_entities: DataFrame | None = None,
-    longterm_entities: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """SessionConsolidationPass (operations/consolidation/
-    SessionConsolidationPass.kt:37): delegates verbatim to the
-    MemoryConsolidator port — promoted + reinforced + merged become the
-    propositions-to-save; discarded are dropped. Runs FIRST in the
-    reference's registration order; the caller feeds the returned store into
-    dream_loop's abstraction/contradiction/decay cycle."""
-    from dice_spark.operators.memory import consolidate_session
-
-    out = consolidate_session(
-        session_props, longterm_props, session_entities, longterm_entities
-    )
-    to_save = (
-        out["promoted"].select("prop_id", "text", "confidence", "grounding")
-        .unionByName(out["reinforced"].select("prop_id", "text", "confidence", "grounding"))
-        .unionByName(out["merged"].select("prop_id", "text", "confidence", "grounding"))
-    )
-    return {**out, "to_save": to_save}

@@ -7,10 +7,10 @@ corpus-dedup primitives a 100 TB training-data pipeline needs, over the
 * exact_dedup           — hash-groupBy on canonicalized text (one shuffle);
 * ngram_jaccard_pairs   — shingle-overlap candidate pairs via an inverted
                           n-gram index join (never a cross join);
-* minhash_signature /
+* minhash_signatures_df /
   minhash_lsh_pairs     — MinHash (md5-based, engine-portable) banded LSH:
                           shingle -> minhash -> band -> bucket join;
-* simhash64             — 64-bit SimHash over token hashes (Hamming near-dup);
+* simhash64_df          — 60-bit SimHash over token hashes (Hamming near-dup);
 * embedding_near_dup    — cosine near-duplicate pairs over an embedding column.
 
 Scale notes: every operator blocks before comparing — the bucket-join pattern
@@ -56,37 +56,14 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def shingles_from_words(words: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array from a words array (distinct).
-
-    Pass a MATERIALIZED words column (projected in a child select), not the
-    split-of-canonicalize expression: higher-order lambdas re-evaluate
-    captured child expressions per element, so an inline regex chain would
-    re-run once per shingle.
-    """
-    k = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), k - 1)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
-    )
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array over canonicalized text (distinct).
-
-    Convenience form for small inputs/tests; hot paths go through
-    shingle_rows (words materialized first)."""
-    return shingles_from_words(F.split(canonicalize_text(text), " "), n)
-
-
 def shingle_rows(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, n_sh, shingle) exploded distinct shingle relation.
 
     Built from posexplode + window lead()s — pure whole-stage-codegen
     operators, ~30x faster than evaluating the array-of-shingles expression
-    (interpreted higher-order lambdas cost ~ms per row). Same shingle set as
-    ``shingles()``: full n-gram windows, or the whole (short) text when the
-    doc has fewer than n words. Repartitions by id first: small parquet scans
+    (interpreted higher-order lambdas cost ~ms per row). Shingles are the
+    full n-gram windows, or the whole (short) text when the doc has fewer
+    than n words. Repartitions by id first: small parquet scans
     arrive as one partition and shingling is the CPU-heavy step.
     """
     from pyspark.sql.window import Window
@@ -168,23 +145,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(text: Column, n_hashes: int = 16, n: int = 3) -> Column:
-    """md5-based MinHash signature: per seed i, min(md5(i || shingle)).
-
-    String-min over salted md5 hex is engine-portable (identical in DuckDB),
-    unlike murmur3 — chosen so the oracle can recompute signatures exactly.
-    """
-    sh = shingles(text, n)
-
-    def salted(i: int):
-        prefix = f"{i}|"
-        # single-arg lambda: a two-parameter callable would make transform
-        # bind the second parameter to the array index column
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return F.array(*[F.array_min(F.transform(sh, salted(i))) for i in range(n_hashes)])
-
-
 def minhash_signatures_df(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -192,13 +152,16 @@ def minhash_signatures_df(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(doc_id, h0..h{n_hashes-1}) via explode + groupBy-min.
+    """(doc_id, h0..h{n_hashes-1}) via explode + groupBy-min: per seed i,
+    min(md5(i || shingle)).
 
-    The aggregation form computes each shingle's md5 exactly once per seed —
-    the array-expression form (minhash_signature) re-evaluates the shingle
-    array per seed inside one projection, which is quadratic work per row.
-    This is also the shape that scales: the explode spreads hashing across
-    the cluster and the partial min combines map-side.
+    String-min over salted md5 hex is engine-portable (identical in DuckDB),
+    unlike murmur3 — chosen so the oracle can recompute signatures exactly.
+    The aggregation form computes each shingle's md5 exactly once per seed
+    (an array-expression form would re-evaluate the shingle array per seed
+    inside one projection, quadratic work per row). This is also the shape
+    that scales: the explode spreads hashing across the cluster and the
+    partial min combines map-side.
     """
     exploded = shingle_rows(docs, n, text_col, id_col).drop("n_sh")
     hashed = exploded.select(
@@ -260,39 +223,18 @@ def token_hash60(tok: Column) -> Column:
     """Engine-portable 60-bit token hash: first 15 hex chars of md5 as bigint.
 
     Spark: conv(hex, 16, 10); DuckDB: ('0x' || hex)::bigint — identical values,
-    so the simhash oracle can value-check pairs (same reason minhash_signature
-    uses md5 rather than murmur3/xxhash64).
+    so the simhash oracle can value-check pairs (same reason
+    minhash_signatures_df uses md5 rather than murmur3/xxhash64).
     """
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def simhash64(text: Column) -> Column:
-    """60-bit SimHash over md5-derived token hashes, as a signed bigint.
-
-    Per bit b: sum(+1 if bit set else -1) over tokens; bit set in the result
-    when the sum > 0. Pure column expressions (aggregate over token array).
-    """
-    tokens = F.split(canonicalize_text(text), " ")
-    hashes = F.transform(tokens, lambda t: token_hash60(t))
-    def vote(b: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_votes = [
-        F.aggregate(hashes, F.lit(0).cast("long"), vote(b)) for b in range(SIMHASH_BITS)
-    ]
-    out = F.lit(0).cast("long")
-    for b, v in enumerate(bit_votes):
-        out = out + F.when(v > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash64_df(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, sh) SimHash via explode + groupBy bit-vote sums.
+    """(doc_id, sh) 60-bit SimHash via explode + groupBy bit-vote sums.
 
-    Aggregation form of simhash64 (same values): one md5 per token, 60
-    conditional sums combined map-side — the expression form folds the token
+    Per bit b: sum(+1 if bit set else -1) over the md5-derived token hashes;
+    bit set in the result when the sum > 0. One md5 per token, 60 conditional
+    sums combined map-side — an array-expression form would fold the token
     array 60 times per row inside a single projection.
     """
     toks = (

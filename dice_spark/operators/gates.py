@@ -20,31 +20,6 @@ def confidence_gate(min_confidence: float) -> Column:
     return F.when(F.col("eff_conf") < min_confidence, F.lit("Reject"))
 
 
-def merge_candidate_gate() -> Column:
-    """Merged/Reinforced/Contradicted outcomes route to review; fail-open
-    (StandardGates.kt:75-131)."""
-    return F.when(
-        F.col("revision_outcome").isin("MERGED", "REINFORCED", "CONTRADICTED"),
-        F.lit("RouteToReview"),
-    )
-
-
-def trust_gate(min_trust: float) -> Column:
-    """trust < min -> review; a missing score fails OPEN (StandardGates.kt:147-175)."""
-    return F.when(
-        F.col("trust_score").isNotNull() & (F.col("trust_score") < min_trust),
-        F.lit("RouteToReview"),
-    )
-
-
-def projection_eligibility_gate() -> Column:
-    """eff_conf < 0.3 or CONTRADICTED -> skip projection (StandardGates.kt:189-224)."""
-    return F.when(
-        (F.col("eff_conf") < PROJECTION_ELIGIBILITY_MIN) | (F.col("status") == "CONTRADICTED"),
-        F.lit("SkipProjection"),
-    )
-
-
 def apply_gates(
     props: DataFrame,
     min_confidence: float = 0.0,

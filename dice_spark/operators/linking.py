@@ -71,13 +71,6 @@ def char_embedding(key) -> "F.Column":
     )
 
 
-def cosine_of_keys(a, b) -> "F.Column":
-    """Cosine similarity of two name keys via their letter-count embeddings."""
-    from dice_spark.operators.dedup import cosine_expr
-
-    return cosine_expr(char_embedding(a), char_embedding(b))
-
-
 def default_bakeoff_scorer(pairs: DataFrame) -> DataFrame:
     """The batched link-scoring UDF seam (LlmCandidateBakeoff stand-in).
 

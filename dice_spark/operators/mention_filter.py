@@ -125,10 +125,6 @@ def rejection_reason(span: Column | str, rules: list | None = None) -> Column:
     return out
 
 
-def is_valid_mention(span: Column | str, rules: list | None = None) -> Column:
-    return rejection_reason(span, rules).isNull()
-
-
 def filter_mentions(
     mentions: DataFrame, span_col: str = "span", rules: list | None = None
 ) -> tuple[DataFrame, DataFrame]:

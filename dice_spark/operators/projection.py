@@ -21,7 +21,7 @@ dedup/MERGE keyed on edge_ref. Edge output partitions by bucket(source_id).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dice_spark.functions.textfns import upper_snake
@@ -67,18 +67,15 @@ def classify_projection(
     )
 
 
-def project_edges(classified: DataFrame) -> DataFrame:
-    """PROJECTED rows -> edges table; one edge per edge_ref (MERGE key).
+def edge_ref(src="source_id", edge_type="edge_type", dst="target_id") -> Column:
+    """The edge MERGE key "src-[TYPE]->dst" (GraphProjector.kt:55); each part
+    is a column name or a Column."""
+    return F.concat(src, F.lit("-["), edge_type, F.lit("]->"), dst)
 
-    edge_ref = "src-[TYPE]->dst" (GraphProjector.kt:55). Multiple propositions
-    emitting the same edge merge: max confidence, unioned source_prop_ids
-    (capped at MAX_EDGE_SOURCE_IDS, smallest ids kept — deterministic), exact
-    support count in n_source_props — the reconciler's Adopt path
-    (projection/lineage/Reconciler.kt).
-    """
-    from pyspark.sql import Window
 
-    e = classified.filter(F.col("lifecycle") == "PROJECTED").select(
+def edge_rows(classified: DataFrame) -> DataFrame:
+    """PROJECTED rows -> one edge row per proposition (before the MERGE)."""
+    return classified.filter(F.col("lifecycle") == "PROJECTED").select(
         F.col("subj_id").alias("source_id"),
         F.col("obj_id").alias("target_id"),
         upper_snake("predicate").alias("edge_type"),
@@ -86,12 +83,24 @@ def project_edges(classified: DataFrame) -> DataFrame:
         F.col("text").alias("description"),
         F.col("prop_id"),
     )
+
+
+def aggregate_edges(rows: DataFrame) -> DataFrame:
+    """Per-proposition edge rows -> one edge per edge_ref (MERGE key).
+
+    Multiple propositions emitting the same edge merge: max confidence,
+    unioned source_prop_ids (capped at MAX_EDGE_SOURCE_IDS, smallest ids
+    kept — deterministic), exact support count in n_source_props — the
+    reconciler's Adopt path (projection/lineage/Reconciler.kt).
+    """
+    from pyspark.sql import Window
+
     # rank-before-collect: the window partitions on the same key as the
     # groupBy, so Catalyst reuses one exchange — no extra shuffle.
     rank_w = Window.partitionBy("source_id", "target_id", "edge_type").orderBy("prop_id")
-    e = e.withColumn("_id_rank", F.row_number().over(rank_w))
     return (
-        e.groupBy("source_id", "target_id", "edge_type")
+        rows.withColumn("_id_rank", F.row_number().over(rank_w))
+        .groupBy("source_id", "target_id", "edge_type")
         .agg(
             F.round(F.max("confidence"), 6).alias("confidence"),
             F.min("description").alias("description"),
@@ -102,13 +111,13 @@ def project_edges(classified: DataFrame) -> DataFrame:
             ).alias("source_prop_ids"),
             F.count(F.lit(1)).alias("n_source_props"),
         )
-        .withColumn(
-            "edge_ref",
-            F.concat(
-                F.col("source_id"), F.lit("-["), F.col("edge_type"), F.lit("]->"), F.col("target_id")
-            ),
-        )
+        .withColumn("edge_ref", edge_ref())
     )
+
+
+def project_edges(classified: DataFrame) -> DataFrame:
+    """PROJECTED rows -> edges table; one edge per edge_ref."""
+    return aggregate_edges(edge_rows(classified))
 
 
 def projection_records(classified: DataFrame, run_id: str) -> DataFrame:
@@ -119,7 +128,7 @@ def projection_records(classified: DataFrame, run_id: str) -> DataFrame:
         "lifecycle",
         F.when(
             F.col("lifecycle") == "PROJECTED",
-            F.concat(F.col("subj_id"), F.lit("-["), upper_snake("predicate"), F.lit("]->"), F.col("obj_id")),
+            edge_ref("subj_id", upper_snake("predicate"), "obj_id"),
         ).alias("target_ref"),
         "reason",
     )
@@ -164,7 +173,7 @@ def grounding_edges(props: DataFrame, nodes: DataFrame, node_id_col: str = "node
         F.col("prop_id").alias("source_id"),
         "target_id",
         F.lit("GROUNDED_IN").alias("edge_type"),
-        F.concat(F.col("prop_id"), F.lit("-[GROUNDED_IN]->"), F.col("target_id")).alias("edge_ref"),
+        edge_ref("prop_id", F.lit("GROUNDED_IN"), "target_id").alias("edge_ref"),
     ).distinct()
     unresolved = g.join(resolved.select("prop_id", "gid").distinct(), ["prop_id", "gid"], "left_anti")
     report = (

@@ -265,10 +265,9 @@ def apply_rules(
     if n_base <= driver_max_facts:
         rows = [(r[0], r[1], r[2]) for r in base.collect()]
         total = _driver_fixpoint(rows, rules, max_iter)
-        spark = facts.sparkSession
-        return spark.createDataFrame(
-            sorted(total), "predicate string, x string, y string"
-        )
+        # base.schema, not a fixed string schema: the result keeps the
+        # input's x/y types, exactly as the distributed loop's unions do.
+        return facts.sparkSession.createDataFrame(sorted(total), base.schema)
     total = base
     delta = base
     for rnd in range(max_iter):

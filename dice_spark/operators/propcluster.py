@@ -51,11 +51,6 @@ CLUSTER_COSINE = 0.95
 CLUSTER_TOP_K = 10  # :142 topK neighbours per anchor
 
 
-def prop_embedding(text_col: Column | str = "text") -> Column:
-    """Deterministic proposition embedding: letter counts of canonical text."""
-    return char_embedding(canonicalize_text(text_col))
-
-
 def find_clusters(
     props: DataFrame,
     threshold: float = CLUSTER_COSINE,

@@ -91,12 +91,6 @@ def merge_arithmetic(c_old, c_new, d_old):
     return conf, dec
 
 
-def reinforce_arithmetic(c_old, c_new, d_old):
-    conf = F.least(c_old + F.lit(0.1) * c_new, F.lit(0.95))
-    dec = F.greatest(d_old * F.lit(0.85), F.lit(0.0))
-    return conf, dec
-
-
 def contradict_arithmetic(c_old, d_old):
     conf = F.greatest(c_old * F.lit(0.3), F.lit(0.05))
     dec = F.least(d_old + F.lit(0.15), F.lit(1.0))
@@ -434,10 +428,9 @@ def revise(
 def candidate_pairs_by_overlap(mentions_a: DataFrame, mentions_b: DataFrame) -> DataFrame:
     """Generate candidate (existing_id, new_id) pairs sharing >= 1 entity.
 
-    The candidate-generation twin of entity_overlap_prefilter: resolved-id
-    equality when both sides resolved, case-insensitive span equality as the
-    fallback (LlmPropositionReviser.kt:344-363). Two equi-joins unioned —
-    hash-partitionable, no OR condition.
+    Resolved-id equality when both sides resolved, case-insensitive span
+    equality as the fallback (LlmPropositionReviser.kt:344-363). Two
+    equi-joins unioned — hash-partitionable, no OR condition.
     """
     a = mentions_a.select(
         F.col("prop_id").alias("existing_id"), F.lower("span").alias("ka"),
@@ -471,15 +464,27 @@ def prop_mentions(props: DataFrame) -> DataFrame:
     )
 
 
+# Python's whitespace (str.isspace: every code point lies below U+3001) — what
+# the pandas tokenizer's regex \s and str.split() both treat as a separator.
+# Java's \s is ASCII-only, so the JVM twin spells the class out.
+_PY_WHITESPACE = "".join(
+    f"\\x{{{c:x}}}" for c in range(0x3001) if chr(c).isspace()
+)
+
+
 def canon_token_set(text) -> "F.Column":
     """JVM twin of the default classifier's tokenization (classify_pairs_udf):
-    lower -> strip [^a-z0-9\\s] -> whitespace split -> distinct, no empties.
+    lower -> strip [^a-z0-9\\s] -> whitespace split -> distinct, no empties,
+    with \\s meaning Python's unicode whitespace on both sides.
     Used to pre-filter the classifier seam's input; identity with the pandas
     path is pinned by tests/test_revision.py."""
     t = F.col(text) if isinstance(text, str) else text
     return F.array_distinct(
         F.filter(
-            F.split(F.regexp_replace(F.lower(t), r"[^a-z0-9\s]", ""), r"\s+"),
+            F.split(
+                F.regexp_replace(F.lower(t), f"[^a-z0-9{_PY_WHITESPACE}]", ""),
+                f"[{_PY_WHITESPACE}]+",
+            ),
             lambda w: F.length(w) > 0,
         )
     )
@@ -724,35 +729,6 @@ def revise_batch(
         classified,
         temporal_conflicts=temporal_conflicts,
         evolving_predicates=evolving_predicates,
-    )
-
-
-def entity_overlap_prefilter(candidate_pairs: DataFrame, mentions_a: DataFrame, mentions_b: DataFrame) -> DataFrame:
-    """Semi-join pre-filter: keep only pairs sharing >= 1 resolved entity
-    (fallback: case-insensitive span), LlmPropositionReviser.kt:344-363.
-
-    Two equi-joins (resolved_id, lowered span) unioned — an OR in one join
-    condition cannot hash-partition, so Spark would plan a nested-loop join.
-    """
-    a = mentions_a.select(
-        F.col("prop_id").alias("a_id"), F.lower("span").alias("ka"),
-        F.col("resolved_id").alias("rida"),
-    )
-    b = mentions_b.select(
-        F.col("prop_id").alias("b_id"), F.lower("span").alias("kb"),
-        F.col("resolved_id").alias("ridb"),
-    )
-    by_entity = (
-        a.filter(F.col("rida").isNotNull())
-        .join(b.filter(F.col("ridb").isNotNull()), F.col("rida") == F.col("ridb"))
-        .select("a_id", "b_id")
-    )
-    by_span = a.join(b, F.col("ka") == F.col("kb")).select("a_id", "b_id")
-    shared = by_entity.unionByName(by_span).distinct()
-    return candidate_pairs.join(
-        shared,
-        (candidate_pairs["existing_id"] == shared["a_id"]) & (candidate_pairs["new_id"] == shared["b_id"]),
-        "left_semi",
     )
 
 

@@ -7,9 +7,13 @@ SURVEY.md §3.1):
     -> assemble_windows        (one shuffle on conv_id)
     -> [anti-join processed_chunks checkpoint]         (resume)
     -> split_turns -> extract  (broadcast relations / mapInPandas seam)
-    -> mentions -> canonicalize (blocking joins + iterative CC)
-    -> propositions (exact-text dedup/merge per context)
+    -> gated_vocabulary -> canonicalize (mention gate, blocking joins + CC)
+    -> propositions (exact-text dedup/merge per context) -> resolve_ids
     -> classify_projection -> edges + projection_records (lineage)
+
+The named stages (extract, triple_mentions, gated_vocabulary, canonicalize,
+resolve_ids) are the one composition shared by the batch pipeline, the
+entity-only variant, the streaming sink and the driver queries.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dice_spark.functions.normalize import norm_key
+from dice_spark.operators import mention_filter
 from dice_spark.operators.assembly import assemble_windows, split_turns, windowed_turns
 from dice_spark.operators.canonicalize import canonicalize_mentions
 from dice_spark.operators.extraction import (
@@ -32,6 +37,84 @@ from dice_spark.operators.projection import (
     projection_records,
 )
 from dice_spark.synth import relations_df
+
+
+def extract(
+    turns: DataFrame,
+    relations: DataFrame,
+    conf_overrides: dict | None = None,
+    use_udf_extractor: bool = True,
+    perspective: str = "ALL",
+) -> DataFrame:
+    """Turns -> triples through the mapInPandas extractor seam, or the
+    broadcast-relations join when ``use_udf_extractor`` is False."""
+    if use_udf_extractor:
+        return extract_triples_udf(turns, conf_overrides, perspective=perspective)
+    return extract_triples(turns, relations, conf_overrides, perspective=perspective)
+
+
+def triple_mentions(triples: DataFrame) -> DataFrame:
+    """Every subject and object mention of the extracted triples, one
+    (span, entity_type) row per occurrence."""
+    return triples.select(
+        F.col("subj_span").alias("span"), F.col("subj_type").alias("entity_type")
+    ).unionByName(
+        triples.select(F.col("obj_span").alias("span"), F.col("obj_type").alias("entity_type"))
+    )
+
+
+def gated_vocabulary(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Mentions -> (counted valid vocabulary, rejected vocabulary).
+
+    Mention quality gate (MentionFilter/MentionValidationRule): junk spans
+    (blank, vague demonstratives, over-long) never become entities. The gate
+    depends only on the span text, so it runs on the counted VOCABULARY (one
+    corpus aggregation first) — value-identical to filtering every
+    occurrence, but the rule when-chain is vocabulary-sized work instead of
+    corpus-sized (the dominant fixed cost of the canonicalization block at 8M
+    turns, measured ~5.7s/pass at local[8]).
+    """
+    counted = triple_mentions(triples).groupBy("span", "entity_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    # Looked up on the module at call time (as are this module's own stage
+    # globals), so a wrapper installed on either — perfbench's traced layers —
+    # sees every call.
+    return mention_filter.filter_mention_groups(counted)
+
+
+def canonicalize(
+    triples: DataFrame, context_id: str, schema: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Triples -> (entities, mention->entity mapping, rejected mentions):
+    the gated vocabulary through blocking joins + connected components."""
+    vocabulary, rejected = gated_vocabulary(triples)
+    entities, mapping = canonicalize_mentions(
+        vocabulary, context_id, schema=schema, pre_counted=True
+    )
+    return entities, mapping, rejected
+
+
+def resolve_ids(props: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Attach subj_id / obj_id (NULL when unresolved) from the entity map."""
+    subj_map = mapping.select(
+        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"), F.col("resolved_id").alias("subj_id")
+    )
+    obj_map = mapping.select(
+        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"), F.col("resolved_id").alias("obj_id")
+    )
+    return (
+        props.withColumn("_sk", norm_key("subj_span"))
+        .withColumn("_st", F.lower("subj_type"))
+        .withColumn("_ok", norm_key("obj_span"))
+        .withColumn("_ot", F.lower("obj_type"))
+        # Entity-map joins: AQE picks broadcast when the distinct-mention
+        # vocabulary is small; at 10^12-turn scale it shuffles on the salted
+        # norm_key (vocabulary cardinality, not mention cardinality).
+        .join(subj_map, ["_sk", "_st"], "left")
+        .join(obj_map, ["_ok", "_ot"], "left")
+        .drop("_sk", "_st", "_ok", "_ot")
+    )
 
 
 def run_pipeline(
@@ -141,10 +224,7 @@ def process_chunks(
     if turns is None:
         turns = split_turns(chunks)
 
-    if use_udf_extractor:
-        raw_triples = extract_triples_udf(turns, conf_overrides, perspective=perspective)
-    else:
-        raw_triples = extract_triples(turns, relations, conf_overrides, perspective=perspective)
+    raw_triples = extract(turns, relations, conf_overrides, use_udf_extractor, perspective)
     chunk_meta_src = chunks.select("chunk_id", "content_hash")
     if spill_dir is not None:
         # The two spill writes are INDEPENDENT jobs (the meta branch renders
@@ -165,31 +245,11 @@ def process_chunks(
         # proposition branch — materialize once.
         triples = _materialize(raw_triples, "triples")
 
-    mentions = triples.select(
-        F.col("subj_span").alias("span"), F.col("subj_type").alias("entity_type")
-    ).unionByName(
-        triples.select(F.col("obj_span").alias("span"), F.col("obj_type").alias("entity_type"))
-    )
-    # Mention quality gate (MentionFilter/MentionValidationRule): junk spans
-    # (blank, vague demonstratives, over-long) never become entities. The
-    # gate depends only on the span text, so it runs on the counted
-    # VOCABULARY (one corpus aggregation first) — value-identical to
-    # filtering every occurrence, but the rule when-chain is vocabulary-
-    # sized work instead of corpus-sized (the dominant fixed cost of the
-    # canonicalization block at 8M turns, measured ~5.7s/pass at local[8]).
-    from dice_spark.operators.mention_filter import filter_mention_groups
-
-    counted = mentions.groupBy("span", "entity_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    counted_valid, rejected_mentions = filter_mention_groups(counted)
     # schema: optional (entity_type, creation_permitted) — closed types are
     # vetoed from entity minting (EscalatingEntityResolver.kt:224-237);
     # their propositions keep NULL subj/obj ids and the projection gate
     # drops those edges downstream.
-    entities, mapping = canonicalize_mentions(
-        counted_valid, context_id, schema=schema, pre_counted=True
-    )
+    entities, mapping, rejected_mentions = canonicalize(triples, context_id, schema=schema)
 
     props = triples_to_propositions(triples, context_id)
     # Provenance stamp (PropositionPipeline.stampProvenance): every
@@ -208,24 +268,7 @@ def process_chunks(
     # (stamp's inner join skips them) — same as the reference, where only
     # resolvable sources gain locators.
     props = with_additional_grounding(props, additional_grounding)
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"), F.col("resolved_id").alias("subj_id")
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"), F.col("resolved_id").alias("obj_id")
-    )
-    props = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        # Entity-map joins: AQE picks broadcast when the distinct-mention
-        # vocabulary is small; at 10^12-turn scale it shuffles on the salted
-        # norm_key (vocabulary cardinality, not mention cardinality).
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-    )
+    props = resolve_ids(props, mapping)
 
     classified = classify_projection(props, relations, min_confidence)
     edges = project_edges(classified)
@@ -287,24 +330,9 @@ def run_entity_pipeline(
     EntityPipeline.kt:46): extract mentions, filter junk spans, canonicalize —
     no propositions, no projection. Returns entities + the mention->entity
     mapping + rejected mentions."""
-    from dice_spark.operators.mention_filter import filter_mention_groups
-
-    turns = windowed_turns(transcripts)
-    triples = (
-        extract_triples_udf(turns, conf_overrides)
-        if use_udf_extractor
-        else extract_triples(turns, relations_df(transcripts.sparkSession), conf_overrides)
-    ).localCheckpoint(eager=False)
-    mentions = triples.select(
-        F.col("subj_span").alias("span"), F.col("subj_type").alias("entity_type")
-    ).unionByName(
-        triples.select(F.col("obj_span").alias("span"), F.col("obj_type").alias("entity_type"))
-    )
-    counted = mentions.groupBy("span", "entity_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    counted, rejected = filter_mention_groups(counted)
-    entities, mapping = canonicalize_mentions(counted, context_id, pre_counted=True)
+    relations = relations_df(transcripts.sparkSession)
+    triples = extract(windowed_turns(transcripts), relations, conf_overrides, use_udf_extractor)
+    entities, mapping, rejected = canonicalize(triples.localCheckpoint(eager=False), context_id)
     return {
         "entities": entities,
         "mention_mapping": mapping,

@@ -339,16 +339,17 @@ class StreamingPipeline:
         # Edges are RE-DERIVED from the post-merge proposition store for the
         # edge_refs this batch touched, via a durable per-prop support
         # relation (edge_ref, prop_id) — uncapped lineage, the same row count
-        # as projection records. A stored edge's confidence is
-        # round(max(conf over supporting props), 6) and its n_source_props
-        # the exact support count (project_edges arithmetic), so when a
+        # as projection records. The re-derivation is the batch engine's own
+        # edge aggregation (projection.aggregate_edges) over every supporting
+        # proposition's post-merge confidence and text, so when a
         # reinforcement fold raises a supporting proposition's confidence the
         # edge follows, exactly as a single batch run would have computed it.
-        # upper_snake + ordering mirror operators/projection.project_edges.
         from dice_spark.operators.projection import (
             DEFAULT_MIN_CONFIDENCE,
-            MAX_EDGE_SOURCE_IDS,
+            aggregate_edges,
             classify_projection,
+            edge_ref,
+            edge_rows,
         )
         from dice_spark.pipeline import relations_df
 
@@ -357,68 +358,27 @@ class StreamingPipeline:
         # PROJECTED set and additionally promotes a duplicated proposition
         # whose per-batch confidence sat below the projection gate but
         # crosses it once folded — keeping batch mode and stream mode agreed.
-        from dice_spark.functions.textfns import upper_snake
-
-        merged_conf = wh.read("propositions").select("prop_id", "confidence")
+        merged = wh.read("propositions")
         reclassified = classify_projection(
-            props.drop("confidence").join(merged_conf, "prop_id"),
+            props.drop("confidence").join(merged.select("prop_id", "confidence"), "prop_id"),
             relations_df(self.spark),
             DEFAULT_MIN_CONFIDENCE,
-        ).filter(F.col("lifecycle") == "PROJECTED")
+        )
         sup = (
-            reclassified.select(
-                F.col("subj_id").alias("source_id"),
-                F.col("obj_id").alias("target_id"),
-                upper_snake("predicate").alias("edge_type"),
-                "prop_id",
-            )
-            .withColumn(
-                "edge_ref",
-                F.concat(
-                    F.col("source_id"), F.lit("-["), F.col("edge_type"),
-                    F.lit("]->"), F.col("target_id"),
-                ),
-            )
+            edge_rows(reclassified)
+            .select("source_id", "target_id", "edge_type", "prop_id", edge_ref().alias("edge_ref"))
             .localCheckpoint(eager=True)
         )
         wh.merge("edge_support", sup, ["edge_ref", "prop_id"])
-
-        from pyspark.sql import Window
 
         affected = sup.select("edge_ref").distinct()
         sup_all = wh.read("edge_support").join(
             F.broadcast(affected), "edge_ref", "left_semi"
         )
-        joined = sup_all.join(
-            wh.read("propositions").select(
-                "prop_id", "confidence", F.col("text").alias("description")
-            ),
-            "prop_id",
-        )
-        rank_w = Window.partitionBy("source_id", "target_id", "edge_type").orderBy(
-            "prop_id"
-        )
-        recomputed = (
-            joined.withColumn("_id_rank", F.row_number().over(rank_w))
-            .groupBy("source_id", "target_id", "edge_type")
-            .agg(
-                F.round(F.max("confidence"), 6).alias("confidence"),
-                F.min("description").alias("description"),
-                F.array_sort(
-                    F.collect_set(
-                        F.when(
-                            F.col("_id_rank") <= MAX_EDGE_SOURCE_IDS, F.col("prop_id")
-                        )
-                    )
-                ).alias("source_prop_ids"),
-                F.count(F.lit(1)).alias("n_source_props"),
-            )
-            .withColumn(
-                "edge_ref",
-                F.concat(
-                    F.col("source_id"), F.lit("-["), F.col("edge_type"),
-                    F.lit("]->"), F.col("target_id"),
-                ),
+        recomputed = aggregate_edges(
+            sup_all.drop("edge_ref").join(
+                merged.select("prop_id", "confidence", F.col("text").alias("description")),
+                "prop_id",
             )
         )
         # edge_ref = "src-[TYPE]->dst" already encodes the full MERGE key

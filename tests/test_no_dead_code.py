@@ -1,0 +1,64 @@
+"""Dead-code guard: every top-level function in dice_spark/ must be referenced
+by name somewhere in the code base other than by its own definition.
+
+Pure ``ast`` walk, no Spark. A reference is a bare name, an attribute, an
+imported name or a string constant equal to the function name (the last
+covers getattr-style lookups); uses inside the function's own body do not
+count, so a function reachable only from itself is still dead.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+SEARCHED = ["dice_spark", "tests", "tools", "perfbench", "__spark_entry__.py", "bench.py"]
+
+
+def _py_files(entry: str) -> list[Path]:
+    p = ROOT / entry
+    return [p] if p.is_file() else sorted(p.rglob("*.py"))
+
+
+def _referenced_names(tree: ast.Module) -> set[str]:
+    """Names referenced in ``tree``, outside the body of the top-level
+    function of the same name."""
+    own_span = {
+        n.name: (n.lineno, n.end_lineno)
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    refs: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            name = node.id
+        elif isinstance(node, ast.Attribute):
+            name = node.attr
+        elif isinstance(node, ast.alias):
+            name = node.name.rsplit(".", 1)[-1]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            name = node.value
+        else:
+            continue
+        span = own_span.get(name)
+        line = getattr(node, "lineno", None)
+        if span and line is not None and span[0] <= line <= span[1]:
+            continue
+        refs.add(name)
+    return refs
+
+
+def test_every_library_function_is_referenced():
+    defined: dict[str, str] = {}
+    referenced: set[str] = set()
+    for entry in SEARCHED:
+        for path in _py_files(entry):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            referenced |= _referenced_names(tree)
+            if entry == "dice_spark":
+                for n in tree.body:
+                    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        defined[n.name] = str(path.relative_to(ROOT))
+    dead = sorted(f"{where}:{name}" for name, where in defined.items() if name not in referenced)
+    assert not dead, f"unreferenced top-level functions: {dead}"

@@ -101,18 +101,25 @@ def test_unbound_head_variable_raises(spark):
 
 
 def test_driver_and_distributed_fixpoints_agree(spark):
-    """The driver dict-join fast path must produce the same tuple set as the
-    distributed semi-naive loop on a branchy cyclic graph."""
+    """The driver dict-join fast path must produce the same tuple set AND
+    schema as the distributed semi-naive loop on a branchy cyclic graph —
+    string node ids and bigint node ids alike."""
     import random
 
     rnd = random.Random(11)
     rows = [("reports_to", f"n{rnd.randrange(10)}", f"n{rnd.randrange(10)}") for _ in range(16)]
     rows += [("manages", f"n{rnd.randrange(8)}", f"n{rnd.randrange(8)}") for _ in range(10)]
     rows += [("is_employed_by", f"p{i}", f"org{i % 4}") for i in range(12)]
-    facts = _facts(spark, rows)
-    drv = apply_rules(facts, driver_max_facts=10_000)
-    dist = apply_rules(facts, driver_max_facts=0)
-    assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
+    int_rows = [("reports_to", rnd.randrange(10), rnd.randrange(10)) for _ in range(16)]
+    int_rows += [("is_employed_by", 100 + i, 200 + i % 4) for i in range(12)]
+    for facts in (
+        _facts(spark, rows),
+        spark.createDataFrame(int_rows, "predicate string, x bigint, y bigint"),
+    ):
+        drv = apply_rules(facts, driver_max_facts=10_000)
+        dist = apply_rules(facts, driver_max_facts=0)
+        assert drv.schema == dist.schema
+        assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
 
 
 def test_semi_naive_deep_chain_converges(spark):

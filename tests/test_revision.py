@@ -99,31 +99,6 @@ def test_classifier_udf_shapes(spark):
     assert got["d"] == "UNRELATED"
 
 
-def test_entity_overlap_prefilter(spark):
-    from dice_spark.operators.revision import entity_overlap_prefilter
-
-    pairs = spark.createDataFrame(
-        [("p1", "n1"), ("p2", "n2"), ("p3", "n3")],
-        "existing_id string, new_id string",
-    )
-    mentions_a = spark.createDataFrame(
-        [("p1", "Alice", "e1"), ("p2", "Bob", None), ("p3", "Carol", "e3")],
-        "prop_id string, span string, resolved_id string",
-    )
-    mentions_b = spark.createDataFrame(
-        [("n1", "Alice Smith", "e1"), ("n2", "BOB", None), ("n3", "Dave", "e4")],
-        "prop_id string, span string, resolved_id string",
-    )
-    kept = {(r["existing_id"], r["new_id"]) for r in entity_overlap_prefilter(pairs, mentions_a, mentions_b).collect()}
-    # p1/n1 share resolved entity e1; p2/n2 share the lowered span "bob";
-    # p3/n3 share nothing -> dropped.
-    assert kept == {("p1", "n1"), ("p2", "n2")}
-    # The plan must be hash-join only: an OR-join would appear as
-    # BroadcastNestedLoopJoin / CartesianProduct.
-    plan = entity_overlap_prefilter(pairs, mentions_a, mentions_b)._jdf.queryExecution().executedPlan().toString()
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-
-
 def test_vector_fast_path_splits(spark):
     from dice_spark.operators.revision import vector_fast_path
 
@@ -480,7 +455,9 @@ def test_seam_prefilter_only_drops_ignored_pairs(spark):
     """The JVM seam prefilter may only drop pairs the default classifier
     labels UNRELATED (which revise ignores); every kept pair's label and
     similarity are still produced by the unchanged seam. Checked over
-    punctuation, negation, subset, multi-space and digit shapes."""
+    punctuation, negation, subset, multi-space and digit shapes, and over
+    unicode whitespace (no-break and em spaces separate tokens in the pandas
+    tokenizer) and the dotted capital I."""
     from pyspark.sql import functions as F
 
     from dice_spark.operators.revision import _seam_prefilter, classify_pairs_udf
@@ -501,6 +478,10 @@ def test_seam_prefilter_only_drops_ignored_pairs(spark):
         "",
         "   ",
         "...",
+        "Alice\u00a0Nguyen works with Bob\u00a0Smith.",
+        "Alice\u2003Nguyen works with Bob\u2003Smith.",
+        "\u0130lkay Nguyen works with Bob Smith.",
+        "ilkay nguyen works with bob smith",
     ]
     rows = [
         (f"e{i}", f"n{j}", a, b)

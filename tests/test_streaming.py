@@ -145,11 +145,17 @@ def test_stream_batch_value_parity(spark, dirs, tmp_path):
         )
 
     def vals(df, cols):
-        return {tuple(r) for r in df.select(*cols).collect()}
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        }
 
     pcols = ["prop_id", "text", "predicate", "confidence", "decay"]
     ecols = ["entity_id", "canonical_name", "entity_type"]
-    gcols = ["edge_ref", "source_id", "target_id", "edge_type", "confidence", "n_source_props"]
+    gcols = [
+        "edge_ref", "source_id", "target_id", "edge_type", "confidence",
+        "n_source_props", "description", "source_prop_ids",
+    ]
     assert vals(batch["propositions"], pcols) == vals(sp.wh.read("propositions"), pcols)
     assert vals(batch["entities"], ecols) == vals(sp.wh.read("entities"), ecols)
     assert vals(batch["edges"], gcols) == vals(sp.wh.read("edges"), gcols)

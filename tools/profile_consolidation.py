@@ -28,10 +28,9 @@ def main() -> None:
     )
     spark = get_spark()
     import __spark_entry__ as e
-    from dice_spark.functions.normalize import norm_key
-    from dice_spark.operators.canonicalize import canonicalize_mentions
     from dice_spark.operators.consolidation import abstraction_pass
     from dice_spark.operators.extraction import triples_to_propositions
+    from dice_spark.pipeline import canonicalize, resolve_ids
 
     stages: dict[str, float] = {}
 
@@ -48,30 +47,13 @@ def main() -> None:
     mark("triples_to_propositions", t0)
 
     t0 = time.monotonic()
-    _, mapping = canonicalize_mentions(e._mentions(triples), e.CTX)
+    _, mapping, _ = canonicalize(triples, e.CTX)
     mapping = mapping.localCheckpoint(eager=True)
-    mark("canonicalize_mentions (edges+CC+agg)", t0)
+    mark("canonicalize (mention gate+edges+CC+agg)", t0)
 
     t0 = time.monotonic()
-    subj_map = mapping.select(
-        F.col("norm_key").alias("_sk"), F.col("type_key").alias("_st"),
-        F.col("resolved_id").alias("subj_id"),
-    )
-    obj_map = mapping.select(
-        F.col("norm_key").alias("_ok"), F.col("type_key").alias("_ot"),
-        F.col("resolved_id").alias("obj_id"),
-    )
-    resolved = (
-        props.withColumn("_sk", norm_key("subj_span"))
-        .withColumn("_st", F.lower("subj_type"))
-        .withColumn("_ok", norm_key("obj_span"))
-        .withColumn("_ot", F.lower("obj_type"))
-        .join(subj_map, ["_sk", "_st"], "left")
-        .join(obj_map, ["_ok", "_ot"], "left")
-        .drop("_sk", "_st", "_ok", "_ot")
-        .localCheckpoint(eager=True)
-    )
-    mark("mapping joins (subj+obj)", t0)
+    resolved = resolve_ids(props, mapping).localCheckpoint(eager=True)
+    mark("resolve_ids (subj+obj)", t0)
 
     t0 = time.monotonic()
     prop_entities = (

@@ -30,17 +30,16 @@ def main() -> None:
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as e
-    from dice_spark.operators.canonicalize import canonicalize_mentions
     from dice_spark.operators.linking import (
         resolution_counters,
         resolve_against_entities,
     )
+    from dice_spark.pipeline import canonicalize
 
     stages: dict[str, float] = {}
 
     t0 = time.monotonic()
-    triples = e._triples(spark, sf_dir)
-    entities, _ = canonicalize_mentions(e._mentions(triples), e.CTX)
+    entities, _, _ = canonicalize(e._triples(spark, sf_dir), e.CTX)
     registry = entities.select(
         "entity_id", "canonical_name", "entity_type"
     ).localCheckpoint(eager=True)
