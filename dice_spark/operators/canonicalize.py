@@ -17,9 +17,11 @@ with deterministic tie-breaks.
 Scale notes: nodes are DISTINCT (type, norm_key) — cardinality is entity
 vocabulary, orders of magnitude below mention count. Fuzzy pair generation is
 blocked (prefix+band by default, MinHash-LSH shingle blocking as the scale
-path) — never a cross join. CC is min-id propagation over the blocked edge
-list with localCheckpoint every few rounds; name-similarity clusters have tiny
-diameter so it converges in a handful of iterations.
+path) — never a cross join. CC takes the shared driver-or-distributed gate
+(operators/adaptive.py): a driver union-find over the blocked edge list at or
+below its row ceiling, else min-id propagation with pointer jumping and lazy
+localCheckpoints; name-similarity clusters have tiny diameter so the loop
+converges in a handful of iterations.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from pyspark.sql.window import Window
 
 from dice_spark.functions.normalize import norm_key, normalize_name
 from dice_spark.functions.textfns import canonical_name_score, mint_entity_id
+from dice_spark.operators import adaptive
 from dice_spark.operators.linking import (
     MAX_DISTANCE_RATIO,
     MIN_FUZZY_LENGTH,
@@ -124,13 +127,8 @@ def match_edges(nodes: DataFrame) -> DataFrame:
     return partial.unionByName(fuzzy).distinct()
 
 
-# Edge-count ceiling for the driver union-find fast path (overridable via
-# $DICE_CC_DRIVER_MAX_EDGES; 0 disables). 1M pairs of hex ids is ~150 MB of
-# Python objects — comfortably inside the driver heap, and >=99% of the
-# fixed cost of the distributed loop (one job per iteration) disappears.
-# Above the ceiling the distributed label-propagation loop runs unchanged,
-# so a 10^9-edge similarity graph never lands on the driver.
-DRIVER_CC_MAX_EDGES = 1_000_000
+# The perfbench trace reads this name; the ceiling itself is the shared one.
+DRIVER_CC_MAX_EDGES = adaptive.DRIVER_MAX_ROWS
 
 
 def _driver_union_find(pairs: list, nodes: DataFrame, node_col: str) -> DataFrame:
@@ -189,8 +187,6 @@ def connected_components(
     edges: DataFrame,
     node_col: str = "node_id",
     max_iter: int = 25,
-    num_partitions: int | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Min-id label propagation until fixpoint -> (node_id, component).
 
@@ -199,55 +195,32 @@ def connected_components(
     propagation is its shuffle-native equivalent. localCheckpoint truncates
     the iterative lineage so plans stay bounded at scale.
 
-    Scale-adaptive execution: the edge list's size is known (one count, also
-    the empty-fast-path probe). At or below ``driver_max_edges`` (default
-    DRIVER_CC_MAX_EDGES, env DICE_CC_DRIVER_MAX_EDGES) the component labels
-    are computed with a driver-side union-find over the collected pairs and
-    broadcast back — identical labels (pinned by tests/test_canonicalize.py),
-    none of the per-iteration scheduler fixed cost. Larger graphs run the
-    distributed loop unchanged.
+    Scale-adaptive execution (adaptive.collect_if_small on the directed (a, b)
+    edge list): at or below the shared ceiling the labels come from a
+    driver-side union-find over the collected pairs, broadcast back —
+    identical labels (pinned by tests/test_canonicalize.py), none of the
+    per-iteration scheduler fixed cost. Larger graphs run the distributed
+    loop.
 
     Raises RuntimeError when max_iter rounds pass without convergence —
     returning partial labels silently would split one true component in two.
     (Iterations needed = component diameter; name-similarity clusters are
     shallow, so 25 is generous.)
     """
-    # Materialize inputs once — every iteration reads them, and without this
-    # each convergence check would recompute the whole upstream pipeline.
-    # Lazy checkpoints throughout the loop: each one is materialized (and its
-    # lineage truncated) by the NEXT full-scan action instead of a dedicated
-    # eager job — one scheduler round-trip per iteration instead of two, which
-    # is the dominant fixed cost of the loop (the tables are vocabulary-sized).
-    # num_partitions: callers that KNOW the node set is tiny relative to the
-    # session's shuffle width (e.g. proposition duplicate clusters) pass a
-    # small count so each of the ~diameter iterations schedules a handful of
-    # tasks instead of a full-width shuffle — pure fixed-cost reduction.
-    if driver_max_edges is None:
-        import os
-
-        driver_max_edges = int(
-            os.environ.get("DICE_CC_DRIVER_MAX_EDGES", DRIVER_CC_MAX_EDGES)
-        )
-    sym = edges.select(F.col("a"), F.col("b")).unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    if num_partitions is not None:
-        sym = sym.repartition(num_partitions, "a")
-    sym = sym.localCheckpoint(eager=False)
-    n_sym = sym.count()
-    labels = nodes.select(F.col(node_col).alias("id")).withColumn("component", F.col("id"))
-    if n_sym == 0:
-        # No similarity edges: every node is its own component. Skipping the
-        # loop saves ~10 scheduler round-trips of fixed cost per run.
-        return labels.withColumnRenamed("id", node_col)
-    if n_sym <= 2 * driver_max_edges:
-        # sym is materialized by the count above, so the collect is one read
-        # of the checkpointed pairs, not a recompute of the edge generator.
-        pairs = [(r[0], r[1]) for r in sym.collect()]
-        return _driver_union_find(pairs, nodes, node_col)
-    if num_partitions is not None:
-        labels = labels.repartition(num_partitions, "id")
-    labels = labels.localCheckpoint(eager=False)
+    # The gate's checkpoint materializes the edge list once — every iteration
+    # reads it, and without it each convergence check would recompute the
+    # whole upstream pipeline. Lazy checkpoints throughout the loop: each one
+    # is materialized (and its lineage truncated) by the NEXT full-scan action
+    # instead of a dedicated eager job — one scheduler round-trip per
+    # iteration instead of two, which is the dominant fixed cost of the loop
+    # (the tables are vocabulary-sized).
+    pairs, rows = adaptive.collect_if_small(edges.select("a", "b"))
+    if rows is not None:
+        return _driver_union_find(rows, nodes, node_col)
+    sym = pairs.unionByName(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    labels = nodes.select(
+        F.col(node_col).alias("id"), F.col(node_col).alias("component")
+    ).localCheckpoint(eager=False)
     converged = False
     for _ in range(max_iter):
         neigh = (

@@ -11,6 +11,8 @@ canonical-flow golden test pins its exact output.
 
 BFS-as-joins: frontier join edges per depth with a visited anti-join; depth is
 bounded (default maxDepth=5) so the loop is a fixed small number of shuffles.
+Below the shared driver ceiling (operators/adaptive.py) the same BFS walks the
+collected edge list on the driver instead.
 """
 
 from __future__ import annotations
@@ -18,14 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dice_spark.operators import adaptive
+
 MAX_DEPTH_DEFAULT = 5
 
-# Symmetric-edge ceiling for the driver BFS fast path (overridable via
-# $DICE_BFS_DRIVER_MAX_EDGES; 0 disables). The distributed frontier loop
-# costs ~3 scheduler round-trips per depth; below the ceiling the whole
-# adjacency fits comfortably on the driver and the BFS is a dict walk with
-# the identical min-predecessor rule. Above it the join loop runs unchanged.
-DRIVER_BFS_MAX_EDGES = 1_000_000
+_BFS_SCHEMA = "entity_id string, distance int, pred string"
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -33,17 +32,14 @@ def _undirected(edges: DataFrame) -> DataFrame:
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
-def _driver_bfs_max_edges() -> int:
-    import os
-
-    return int(os.environ.get("DICE_BFS_DRIVER_MAX_EDGES", DRIVER_BFS_MAX_EDGES))
-
-
-def _driver_bfs(adj: dict, start_id: str, max_depth: int) -> list[tuple]:
-    """Level-synchronous BFS over a collected adjacency map. Exactly the
+def _driver_bfs(rows: list, start_id: str, max_depth: int) -> list[tuple]:
+    """Level-synchronous BFS over collected (src, dst) rows. Exactly the
     distributed rule: per depth, an undiscovered neighbor's predecessor is
     the MIN frontier node reaching it. Returns (entity_id, distance, pred)
     rows including the start row (distance 0, pred None)."""
+    adj: dict = {}
+    for src, dst in rows:
+        adj.setdefault(src, []).append(dst)
     visited = {start_id: (0, None)}
     frontier = [start_id]
     for d in range(1, max_depth + 1):
@@ -61,6 +57,36 @@ def _driver_bfs(adj: dict, start_id: str, max_depth: int) -> list[tuple]:
             visited[dst] = (d, pred)
         frontier = list(nxt)
     return [(node, d, p) for node, (d, p) in visited.items()]
+
+
+def _frontier_bfs(
+    sym: DataFrame, start_id: str, max_depth: int, stop_at: str | None = None
+) -> DataFrame:
+    """The distributed form of _driver_bfs: frontier join edges per depth with
+    a visited anti-join, one eager checkpoint per depth. Stops early once
+    ``stop_at`` is discovered. Returns the visited (entity_id, distance, pred)
+    table including the start row."""
+    visited = sym.sparkSession.createDataFrame([(start_id, 0, None)], _BFS_SCHEMA)
+    frontier = visited
+    found = start_id == stop_at
+    for d in range(1, max_depth + 1):
+        if found:
+            break
+        nxt = (
+            sym.join(frontier, sym.src == frontier.entity_id)
+            .groupBy(F.col("dst").alias("entity_id"))
+            .agg(F.min("src").alias("pred"))
+            .join(visited.select("entity_id"), "entity_id", "left_anti")
+            .withColumn("distance", F.lit(d))
+            .select("entity_id", "distance", "pred")
+        )
+        if nxt.limit(1).count() == 0:
+            break
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        frontier = nxt
+        if stop_at is not None:
+            found = nxt.filter(F.col("entity_id") == stop_at).limit(1).count() > 0
+    return visited
 
 
 def prop_edges(props: DataFrame) -> DataFrame:
@@ -111,44 +137,15 @@ def neighborhood(
         # by any floor), so map 0 to UNKNOWN_ORDINAL instead of -1.
         tier_ord = F.when(pos == 0, F.lit(UNKNOWN_ORDINAL)).otherwise(pos - 1)
         edges = edges.filter((tier_ord <= floor_ord) & (tier_ord < UNKNOWN_ORDINAL))
-    sym = _undirected(edges).localCheckpoint(eager=False)
-    n_sym = sym.count()
-    if n_sym <= _driver_bfs_max_edges():
-        # Scale-adaptive: the symmetric edge list is small enough to walk on
-        # the driver (one collect of the already-materialized checkpoint vs
-        # ~3 scheduler round-trips per BFS depth). Identical rows to the
-        # distributed loop — pinned by tests/test_graphquery_driver.py.
-        adj: dict = {}
-        for r in sym.collect():
-            adj.setdefault(r[0], []).append(r[1])
-        rows = _driver_bfs(adj, start_id, max_depth)
-        out = spark.createDataFrame(
-            rows, "entity_id string, distance int, pred string"
-        )
-        return out.filter(F.col("distance") > 0)
-    sym = sym.cache()
-    visited = spark.createDataFrame(
-        [(start_id, 0, None)], "entity_id string, distance int, pred string"
-    )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = (
-            sym.join(frontier, sym.src == frontier.entity_id)
-            .groupBy(F.col("dst").alias("entity_id"))
-            .agg(F.min("src").alias("pred"))
-            .join(visited.select("entity_id"), "entity_id", "left_anti")
-            .withColumn("distance", F.lit(d))
-            .select("entity_id", "distance", "pred")
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    # Release the pinned edge list: every round materialized visited eagerly,
-    # so nothing returned still reads the cache — without this each BFS call
-    # in a long-lived session pins another copy of the relation in executor
-    # memory (the exact leak fixed in linking.py's vector tier).
-    sym.unpersist()
+    # Scale-adaptive (adaptive.collect_if_small): a small symmetric edge list
+    # is walked on the driver (one collect vs ~3 scheduler round-trips per
+    # BFS depth). Identical rows on both paths — pinned by
+    # tests/test_graphquery_driver.py.
+    sym, rows = adaptive.collect_if_small(_undirected(edges))
+    if rows is not None:
+        visited = spark.createDataFrame(_driver_bfs(rows, start_id, max_depth), _BFS_SCHEMA)
+    else:
+        visited = _frontier_bfs(sym, start_id, max_depth)
     return visited.filter(F.col("distance") > 0)
 
 
@@ -158,60 +155,28 @@ def path_between(edges: DataFrame, from_id: str, to_id: str, max_depth: int = MA
     Deterministic tie-break: the lexicographically smallest predecessor wins,
     replacing the reference's iteration-order dependence with a stable rule.
     """
-    spark = edges.sparkSession
-    sym = _undirected(edges).localCheckpoint(eager=False)
-    n_sym = sym.count()
-    if n_sym <= _driver_bfs_max_edges():
-        # Same scale-adaptive fast path as neighborhood(); the backtrack then
-        # walks the in-memory predecessor map instead of per-step filters.
-        adj: dict = {}
-        for r in sym.collect():
-            adj.setdefault(r[0], []).append(r[1])
-        pred_of = {n: p for n, _d, p in _driver_bfs(adj, from_id, max_depth)}
-        if to_id not in pred_of and from_id != to_id:
-            return None
-        path, cur = [], to_id
-        while cur is not None:
-            if cur not in pred_of:
-                return None
-            path.append(cur)
-            cur = pred_of[cur]
-        return list(reversed(path))
-    sym = sym.cache()
-    visited = spark.createDataFrame(
-        [(from_id, 0, None)], "entity_id string, distance int, pred string"
-    )
-    frontier = visited
-    found = from_id == to_id
-    for d in range(1, max_depth + 1):
-        if found:
-            break
-        nxt = (
-            sym.join(frontier, sym.src == frontier.entity_id)
-            .groupBy(F.col("dst").alias("entity_id"))
-            .agg(F.min("src").alias("pred"))
-            .join(visited.select("entity_id"), "entity_id", "left_anti")
-            .withColumn("distance", F.lit(d))
-            .select("entity_id", "distance", "pred")
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-        found = nxt.filter(F.col("entity_id") == to_id).limit(1).count() > 0
-    # Release the pinned edge list (visited is eagerly checkpointed; the
-    # backtrack below never re-reads sym).
-    sym.unpersist()
-    # Backtrack with <= max_depth single-row filters against the (distributed)
-    # predecessor table — driver payload stays O(path length), never the whole
-    # visited frontier (which approaches |V| on a dense graph at depth 5).
+    sym, rows = adaptive.collect_if_small(_undirected(edges))
+    if rows is not None:
+        pred_of = {n: p for n, _d, p in _driver_bfs(rows, from_id, max_depth)}
+
+        def step(node):
+            return [pred_of[node]] if node in pred_of else []
+    else:
+        visited = _frontier_bfs(sym, from_id, max_depth, stop_at=to_id)
+
+        # Single-row filters against the (distributed) predecessor table —
+        # driver payload stays O(path length), never the whole visited
+        # frontier (which approaches |V| on a dense graph at depth 5).
+        def step(node):
+            return [r[0] for r in visited.filter(F.col("entity_id") == node).select("pred").take(1)]
+
     path, cur = [], to_id
     while cur is not None:
-        step = visited.filter(F.col("entity_id") == cur).select("pred").take(1)
-        if not step:
+        pred = step(cur)
+        if not pred:
             return None
         path.append(cur)
-        cur = step[0]["pred"]
+        cur = pred[0]
     return list(reversed(path))
 
 

@@ -25,7 +25,8 @@ Scale: each round is |rules| joins + one anti-join; lineage is truncated per
 round (localCheckpoint) exactly like the canonicalizer's CC loop. Transitive
 closure output is inherently O(paths); chains in conversation KGs are
 shallow (org charts), so rounds ~ chain depth. The per-round convergence
-check is ONE count() action.
+check is ONE count() action. Below the shared driver ceiling
+(operators/adaptive.py) the same fixpoint runs as dict joins on the driver.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dice_spark.operators import adaptive
 
 
 @dataclass(frozen=True)
@@ -142,14 +145,6 @@ def _eval_rule(total: DataFrame, rule: Rule, delta: DataFrame | None = None, del
     ).distinct()
 
 
-# Fact-count ceiling for the driver fixpoint fast path (overridable via
-# $DICE_DATALOG_DRIVER_MAX_FACTS; 0 disables). Mirrors the CC/BFS pattern:
-# below the ceiling the whole fixpoint is dict joins on the driver (one
-# collect, zero per-round scheduler cost); above it the distributed
-# semi-naive loop runs.
-DRIVER_DATALOG_MAX_FACTS = 1_000_000
-
-
 def _driver_fixpoint(
     rows: list[tuple], rules: tuple[Rule, ...], max_iter: int
 ) -> set[tuple]:
@@ -223,7 +218,6 @@ def apply_rules(
     facts: DataFrame,
     rules: tuple[Rule, ...] = DICE_RULES,
     max_iter: int = 25,
-    driver_max_facts: int | None = None,
 ) -> DataFrame:
     """Fixpoint over ``rules`` starting from binary ``facts``
     (predicate, x, y). Returns base + derived facts, deduplicated.
@@ -236,10 +230,10 @@ def apply_rules(
     chains. The anti-join dedup makes the positional union exact (any tuple
     first derivable in round k uses at least one round-(k-1) tuple).
 
-    Scale-adaptive: at or below ``driver_max_facts`` base facts (default
-    DRIVER_DATALOG_MAX_FACTS, env DICE_DATALOG_DRIVER_MAX_FACTS) the whole
-    fixpoint runs as dict joins on the driver — identical tuple set, none of
-    the per-round scheduler cost (parity pinned in tests/test_prolog_rules).
+    Scale-adaptive (adaptive.collect_if_small on the base facts): at or below
+    the shared ceiling the whole fixpoint runs as dict joins on the driver —
+    identical tuple set, none of the per-round scheduler cost (parity pinned
+    in tests/test_prolog_rules).
 
     Raises RuntimeError if max_iter rounds pass without convergence —
     a silently truncated closure would claim a chain shorter than it is.
@@ -254,17 +248,9 @@ def apply_rules(
                 raise ValueError(
                     f"head variable {v} not bound in body of {rule.head}"
                 )
-    if driver_max_facts is None:
-        import os
-
-        driver_max_facts = int(
-            os.environ.get("DICE_DATALOG_DRIVER_MAX_FACTS", DRIVER_DATALOG_MAX_FACTS)
-        )
-    base = facts.select("predicate", "x", "y").distinct().localCheckpoint(eager=True)
-    n_base = base.count()
-    if n_base <= driver_max_facts:
-        rows = [(r[0], r[1], r[2]) for r in base.collect()]
-        total = _driver_fixpoint(rows, rules, max_iter)
+    base, rows = adaptive.collect_if_small(facts.select("predicate", "x", "y").distinct())
+    if rows is not None:
+        total = _driver_fixpoint([tuple(r) for r in rows], rules, max_iter)
         # base.schema, not a fixed string schema: the result keeps the
         # input's x/y types, exactly as the distributed loop's unions do.
         return facts.sparkSession.createDataFrame(sorted(total), base.schema)

@@ -90,12 +90,13 @@ def test_canonicalize_schema_veto_excludes_closed_types(spark):
     assert {r.type_key for r in mapping.collect()} == {"person"}
 
 
-def test_cc_long_chain_converges_within_log_iterations(spark):
+def test_cc_long_chain_converges_within_log_iterations(spark, monkeypatch):
     """A 2048-node chain (diameter 2047) must converge via the pointer-jumping
     (path-halving) step in ~log2(n) rounds — well under max_iter=25. Plain
     min-label propagation alone would need 2047 rounds and raise."""
     from pyspark.sql import functions as F
 
+    from dice_spark.operators import adaptive
     from dice_spark.operators.canonicalize import connected_components
 
     n = 2048
@@ -104,40 +105,47 @@ def test_cc_long_chain_converges_within_log_iterations(spark):
         F.format_string("n%05d", "id").alias("a"),
         F.format_string("n%05d", F.col("id") + 1).alias("b"),
     )
-    # driver_max_edges=0 pins the DISTRIBUTED loop (the driver union-find
-    # fast path would otherwise absorb a 2k-edge graph).
-    comps = connected_components(
-        nodes, edges, max_iter=25, num_partitions=4, driver_max_edges=0
-    )
+    # A zero ceiling pins the DISTRIBUTED loop (the driver union-find fast
+    # path would otherwise absorb a 2k-edge graph).
+    monkeypatch.setattr(adaptive, "DRIVER_MAX_ROWS", 0)
+    comps = connected_components(nodes, edges, max_iter=25)
     rows = comps.collect()
     assert len(rows) == n
     assert {r["component"] for r in rows} == {"n00000"}
 
 
-def test_cc_driver_and_distributed_paths_agree(spark):
+def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The driver union-find fast path must label exactly like the distributed
     min-id propagation — same components, same (min-id) labels, isolated
-    nodes keeping their own id — on string and long node ids."""
+    nodes keeping their own id — on string and long node ids, and on an
+    empty edge list (every node its own component)."""
     import random
 
     from pyspark.sql import functions as F
 
+    from dice_spark.operators import adaptive
     from dice_spark.operators.canonicalize import connected_components
 
     rnd = random.Random(7)
     n = 400
     pairs = [(rnd.randrange(n), rnd.randrange(n)) for _ in range(220)]
-    # string ids
     nodes_s = spark.range(n).select(F.format_string("x%04d", "id").alias("node_id"))
     edges_s = spark.createDataFrame(
         [(f"x{a:04d}", f"x{b:04d}") for a, b in pairs], "a string, b string"
     )
-    drv = connected_components(nodes_s, edges_s, driver_max_edges=10_000)
-    dist = connected_components(nodes_s, edges_s, driver_max_edges=0, num_partitions=4)
-    assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
     # long ids (dedup_clusters uses doc_id bigints)
     nodes_l = spark.range(n).select(F.col("id").alias("node_id"))
     edges_l = spark.createDataFrame(pairs, "a long, b long")
-    drv_l = connected_components(nodes_l, edges_l, driver_max_edges=10_000)
-    dist_l = connected_components(nodes_l, edges_l, driver_max_edges=0, num_partitions=4)
-    assert sorted(map(tuple, drv_l.collect())) == sorted(map(tuple, dist_l.collect()))
+    empty = spark.createDataFrame([], "a string, b string")
+
+    def labels(nodes, edges):
+        return sorted(map(tuple, connected_components(nodes, edges).collect()))
+
+    for nodes, edges in ((nodes_s, edges_s), (nodes_l, edges_l), (nodes_s, empty)):
+        drv = labels(nodes, edges)
+        # -1, not 0: an empty edge list must take the distributed loop too.
+        with monkeypatch.context() as m:
+            m.setattr(adaptive, "DRIVER_MAX_ROWS", -1)
+            dist = labels(nodes, edges)
+        assert drv == dist
+    assert drv == [(f"x{i:04d}", f"x{i:04d}") for i in range(n)]

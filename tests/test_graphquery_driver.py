@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
+from dice_spark.operators import adaptive
 from dice_spark.operators.graphquery import neighborhood, path_between
 
 
@@ -21,20 +19,24 @@ def edges(spark):
 
 
 def _force(monkeypatch, value):
-    monkeypatch.setenv("DICE_BFS_DRIVER_MAX_EDGES", str(value))
+    monkeypatch.setattr(adaptive, "DRIVER_MAX_ROWS", value)
 
 
 def test_neighborhood_paths_agree(spark, edges, monkeypatch):
-    _force(monkeypatch, 10_000)
-    drv = sorted(map(tuple, neighborhood(edges, "a", max_depth=3).collect()))
-    _force(monkeypatch, 0)
-    dist = sorted(map(tuple, neighborhood(edges, "a", max_depth=3).collect()))
-    assert drv == dist
-    assert drv  # non-empty
+    for start in ("a", "zz"):  # "zz" is not in the graph
+        _force(monkeypatch, 10_000)
+        drv = sorted(map(tuple, neighborhood(edges, start, max_depth=3).collect()))
+        _force(monkeypatch, 0)
+        dist = sorted(map(tuple, neighborhood(edges, start, max_depth=3).collect()))
+        assert drv == dist
+        assert bool(drv) == (start == "a")
 
 
 def test_path_between_paths_agree(spark, edges, monkeypatch):
-    for frm, to in [("a", "e"), ("a", "j"), ("a", "g"), ("a", "a")]:
+    # ("a", "zz"): unknown target; ("zz", ...): start absent from the graph
+    for frm, to in [
+        ("a", "e"), ("a", "j"), ("a", "g"), ("a", "a"), ("a", "zz"), ("zz", "a"), ("zz", "zz"),
+    ]:
         _force(monkeypatch, 10_000)
         drv = path_between(edges, frm, to, max_depth=5)
         _force(monkeypatch, 0)

@@ -62,3 +62,22 @@ def test_every_library_function_is_referenced():
                         defined[n.name] = str(path.relative_to(ROOT))
     dead = sorted(f"{where}:{name}" for name, where in defined.items() if name not in referenced)
     assert not dead, f"unreferenced top-level functions: {dead}"
+
+
+def test_operators_read_no_environment():
+    """Operator behaviour is fixed by code, not by environment knobs: the one
+    driver-or-distributed ceiling is ``adaptive.DRIVER_MAX_ROWS``. Deployment
+    settings (master, memory) belong to ``session.py``."""
+    env_names = {"environ", "getenv", "environb", "getenvb"}
+    readers = []
+    for path in _py_files("dice_spark/operators"):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and node.attr in env_names:
+                hit = isinstance(node.value, ast.Name) and node.value.id == "os"
+            elif isinstance(node, ast.ImportFrom):
+                hit = node.module == "os" and any(a.name in env_names for a in node.names)
+            else:
+                continue
+            if hit:
+                readers.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not readers, f"operators reading the environment: {readers}"

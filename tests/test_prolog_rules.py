@@ -3,6 +3,7 @@ evaluates (projection/prolog/PrologEngine.kt:52-206)."""
 
 import pytest
 
+from dice_spark.operators import adaptive
 from dice_spark.operators.prolog_rules import (
     DICE_RULES,
     Atom,
@@ -100,7 +101,7 @@ def test_unbound_head_variable_raises(spark):
         apply_rules(facts, bad)
 
 
-def test_driver_and_distributed_fixpoints_agree(spark):
+def test_driver_and_distributed_fixpoints_agree(spark, monkeypatch):
     """The driver dict-join fast path must produce the same tuple set AND
     schema as the distributed semi-naive loop on a branchy cyclic graph —
     string node ids and bigint node ids alike."""
@@ -116,13 +117,15 @@ def test_driver_and_distributed_fixpoints_agree(spark):
         _facts(spark, rows),
         spark.createDataFrame(int_rows, "predicate string, x bigint, y bigint"),
     ):
-        drv = apply_rules(facts, driver_max_facts=10_000)
-        dist = apply_rules(facts, driver_max_facts=0)
+        drv = apply_rules(facts)
+        with monkeypatch.context() as m:
+            m.setattr(adaptive, "DRIVER_MAX_ROWS", 0)
+            dist = apply_rules(facts)
         assert drv.schema == dist.schema
         assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
 
 
-def test_semi_naive_deep_chain_converges(spark):
+def test_semi_naive_deep_chain_converges(spark, monkeypatch):
     """A 200-node reports_to path: the closure (19900 chain tuples) must
     converge within max_iter on BOTH paths — the distributed loop now joins
     only the previous round's delta, so its per-round work is bounded by the
@@ -133,12 +136,13 @@ def test_semi_naive_deep_chain_converges(spark):
     expect = (n - 1) * n // 2  # all i<j pairs
     # rounds = chain depth (the rule extends one hop per round); semi-naive
     # bounds each ROUND's work by the delta, so 200 driver rounds are cheap
-    drv = apply_rules(facts, max_iter=n + 5, driver_max_facts=10_000)
+    drv = apply_rules(facts, max_iter=n + 5)
     n_drv = drv.filter(drv.predicate == "reports_to_chain").count()
     assert n_drv == expect
     # distributed semi-naive on a smaller chain (keeps the test fast but
     # still needs >> trivial rounds of pure-delta growth)
     n2 = 10
     rows2 = [("reports_to", f"m{i:02d}", f"m{i + 1:02d}") for i in range(n2 - 1)]
-    dist = apply_rules(_facts(spark, rows2), driver_max_facts=0)
+    monkeypatch.setattr(adaptive, "DRIVER_MAX_ROWS", 0)
+    dist = apply_rules(_facts(spark, rows2))
     assert dist.filter(dist.predicate == "reports_to_chain").count() == (n2 - 1) * n2 // 2
