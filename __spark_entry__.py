@@ -23,6 +23,7 @@ from dice_spark.functions.textstats import (
     quality_score,
     token_count,
 )
+from dice_spark.operators.adaptive import local_frame
 from dice_spark.operators.assembly import assemble_windows, split_turns, windowed_turns
 from dice_spark.operators.dedup import (
     exact_dedup,
@@ -234,7 +235,7 @@ def q_grounding_wiring(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = (
         chunks.filter(F.substring("conv_id", -2, 2) == "33")
         .select(F.col("chunk_id").alias("node_id"))
-        .unionByName(spark.createDataFrame([("node:0:20",)], "node_id string"))
+        .unionByName(local_frame(spark, [("node:0:20",)], "node_id string"))
         .distinct()
     )
     return grounding_edges(props, nodes)["edges"]
@@ -279,8 +280,7 @@ def q_path_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = edges.select(F.explode(F.array("source_id", "target_id")).alias("e"))
     bounds = ids.agg(F.min("e").alias("lo"), F.max("e").alias("hi")).collect()[0]
     path = path_between(edges, bounds["lo"], bounds["hi"], max_depth=5)
-    rows = [(i, x) for i, x in enumerate(path or [])]
-    return spark.createDataFrame(rows or [], "step int, entity_id string")
+    return local_frame(spark, list(enumerate(path or [])), "step int, entity_id string")
 
 
 def q_incremental_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,7 +472,8 @@ def q_gate_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     props = props.withColumn(
         "eff_conf", F.round(effective_confidence(as_of=as_of), 6)
     )
-    floors = spark.createDataFrame(
+    floors = local_frame(
+        spark,
         [
             (0, "is employed by", 0.9, "works with"),
             (1, "works with", 0.8, None),
@@ -586,9 +587,7 @@ def q_linking_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relation against its own ancestor trips AQE reused-exchange zips.
         .localCheckpoint(eager=True)
     )
-    schema = spark.createDataFrame(
-        [("Org", False)], "entity_type string, creation_permitted boolean"
-    )
+    schema = local_frame(spark, [("Org", False)], "entity_type string, creation_permitted boolean")
     resolved = resolve_against_entities(probe, registry, vector_tier=True, schema=schema)
     return resolution_counters(resolved)
 

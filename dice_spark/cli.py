@@ -37,6 +37,7 @@ import sys
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -57,6 +58,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from dice_spark.operators.adaptive import local_frame
     from dice_spark.pipeline import DEFAULT_MIN_CONFIDENCE, run_pipeline
     from dice_spark.session import get_spark
     from dice_spark.storage import make_warehouse
@@ -111,18 +113,20 @@ def main(argv: list[str] | None = None) -> int:
     }
     # Durable per-stage counter metrics alongside the lineage (one row per
     # run) — the audit trail a rerun or a monitor reads without re-counting.
-    # The row is a dict so Spark binds values to schema fields by NAME
-    # (StructType.toInternal uses obj.get(name) for dicts); adding or
-    # reordering a counter key can't silently shift values between the
-    # all-long columns the way a positional tuple could.
+    # Values bind to schema fields by NAME (the row tuple is read off the
+    # schema's field names), so adding or reordering a counter key can't
+    # silently shift values between the all-long columns.
+    schema = DataType.fromDDL(
+        "run_id string, context_id string, n_turns long, n_chunks long,"
+        " n_triples long, n_propositions long, n_entities long,"
+        " n_edges long, finished_at timestamp"
+    )
+    row = {**counters, "finished_at": None}
     wh.append(
         "stage_counters",
-        spark.createDataFrame(
-            [{**counters, "finished_at": None}],
-            "run_id string, context_id string, n_turns long, n_chunks long,"
-            " n_triples long, n_propositions long, n_entities long,"
-            " n_edges long, finished_at timestamp",
-        ).withColumn("finished_at", F.current_timestamp()),
+        local_frame(spark, [tuple(row[f] for f in schema.fieldNames())], schema).withColumn(
+            "finished_at", F.current_timestamp()
+        ),
     )
     print(json.dumps(counters))
     return 0

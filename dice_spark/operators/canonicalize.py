@@ -166,7 +166,8 @@ def _driver_union_find(pairs: list, nodes: DataFrame, node_col: str) -> DataFram
         from pyspark.sql.types import StructField, StructType
 
         mdf = F.broadcast(
-            spark.createDataFrame(
+            adaptive.local_frame(
+                spark,
                 mapping,
                 StructType(
                     [StructField("id", id_type), StructField("_comp", id_type)]

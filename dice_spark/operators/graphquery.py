@@ -66,7 +66,7 @@ def _frontier_bfs(
     a visited anti-join, one eager checkpoint per depth. Stops early once
     ``stop_at`` is discovered. Returns the visited (entity_id, distance, pred)
     table including the start row."""
-    visited = sym.sparkSession.createDataFrame([(start_id, 0, None)], _BFS_SCHEMA)
+    visited = adaptive.local_frame(sym.sparkSession, [(start_id, 0, None)], _BFS_SCHEMA)
     frontier = visited
     found = start_id == stop_at
     for d in range(1, max_depth + 1):
@@ -143,7 +143,7 @@ def neighborhood(
     # tests/test_graphquery_driver.py.
     sym, rows = adaptive.collect_if_small(_undirected(edges))
     if rows is not None:
-        visited = spark.createDataFrame(_driver_bfs(rows, start_id, max_depth), _BFS_SCHEMA)
+        visited = adaptive.local_frame(spark, _driver_bfs(rows, start_id, max_depth), _BFS_SCHEMA)
     else:
         visited = _frontier_bfs(sym, start_id, max_depth)
     return visited.filter(F.col("distance") > 0)

@@ -250,10 +250,10 @@ def apply_rules(
                 )
     base, rows = adaptive.collect_if_small(facts.select("predicate", "x", "y").distinct())
     if rows is not None:
-        total = _driver_fixpoint([tuple(r) for r in rows], rules, max_iter)
+        total = _driver_fixpoint(rows, rules, max_iter)
         # base.schema, not a fixed string schema: the result keeps the
         # input's x/y types, exactly as the distributed loop's unions do.
-        return facts.sparkSession.createDataFrame(sorted(total), base.schema)
+        return adaptive.local_frame(facts.sparkSession, sorted(total), base.schema)
     total = base
     delta = base
     for rnd in range(max_iter):

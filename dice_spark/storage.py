@@ -226,10 +226,10 @@ def set_pinned(
     """
     from pyspark.sql import functions as F
 
+    from dice_spark.operators.adaptive import local_frame
+
     props = wh.read(table)
-    ids = props.sparkSession.createDataFrame(
-        [(i,) for i in prop_ids], "prop_id string"
-    )
+    ids = local_frame(props.sparkSession, [(i,) for i in prop_ids], "prop_id string")
     hit = props.join(F.broadcast(ids), "prop_id", "semi").withColumn(
         "pinned", F.lit(bool(pinned))
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dice_spark.operators.adaptive import local_frame
 from dice_spark.operators.assembly import (
     OVERLAP_SIZE,
     TRIGGER_INTERVAL,
@@ -44,8 +45,7 @@ def triggered_windows(
     """
     sizes = transcripts.groupBy("conv_id").agg((F.max("turn_idx") + 1).alias("size"))
     if bookmarks is None:
-        spark = transcripts.sparkSession
-        bookmarks = spark.createDataFrame([], "conv_id string, end_index int")
+        bookmarks = local_frame(transcripts.sparkSession, [], "conv_id string, end_index int")
     bm = bookmarks.groupBy("conv_id").agg(F.max("end_index").alias("last_end"))
     j = sizes.join(bm, "conv_id", "left").withColumn(
         "last_end", F.coalesce("last_end", F.lit(0))

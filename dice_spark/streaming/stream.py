@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dice_spark.operators.adaptive import local_frame
 from dice_spark.operators.assembly import (
     OVERLAP_SIZE,
     TRIGGER_INTERVAL,
@@ -311,7 +312,8 @@ class StreamingPipeline:
             F.lit("stream-save").alias("reason"),
             F.lit(None).cast("string").alias("payload"),
         ).select(*EVENT_COLUMNS)
-        stats = self.spark.createDataFrame(
+        stats = local_frame(
+            self.spark,
             [(chunks.count(), props.count(), edges.count(), entities.count())],
             "n_chunks long, n_propositions long, n_edges long, n_entities long",
         )

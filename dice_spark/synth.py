@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dice_spark.operators.adaptive import local_frame
+
 # lpad TRUNCATES ids wider than the pad — 8 digits headroom so replicated /
 # scaled user-id spaces never collapse distinct users into one conversation.
 CONV_PAD = 8
@@ -198,7 +200,9 @@ FROM {events_rel}
 def relations_df(spark: SparkSession) -> DataFrame:
     """The broadcast relation vocabulary (reference Relations, common/Relation.kt:36)."""
     rows = [(i, p, st, ot) for i, (p, st, ot) in enumerate(RELATIONS)]
-    return spark.createDataFrame(rows, "priority int, predicate string, subject_type string, object_type string")
+    return local_frame(
+        spark, rows, "priority int, predicate string, subject_type string, object_type string"
+    )
 
 
 def relations_cte() -> str:

@@ -114,11 +114,12 @@ def test_cc_long_chain_converges_within_log_iterations(spark, monkeypatch):
     assert {r["component"] for r in rows} == {"n00000"}
 
 
-def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
+def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch, optimized_plan):
     """The driver union-find fast path must label exactly like the distributed
-    min-id propagation — same components, same (min-id) labels, isolated
-    nodes keeping their own id — on string and long node ids, and on an
-    empty edge list (every node its own component)."""
+    min-id propagation — same components, same (min-id) labels, same schema,
+    isolated nodes keeping their own id — on string and long node ids, and
+    on an empty edge list (every node its own component). The driver labels
+    carry no LogicalRDD (their mapping enters as a LocalRelation)."""
     import random
 
     from pyspark.sql import functions as F
@@ -139,13 +140,16 @@ def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     empty = spark.createDataFrame([], "a string, b string")
 
     def labels(nodes, edges):
-        return sorted(map(tuple, connected_components(nodes, edges).collect()))
+        df = connected_components(nodes, edges)
+        return df.schema, sorted(map(tuple, df.collect())), optimized_plan(df)
 
     for nodes, edges in ((nodes_s, edges_s), (nodes_l, edges_l), (nodes_s, empty)):
-        drv = labels(nodes, edges)
+        drv_schema, drv, drv_plan = labels(nodes, edges)
+        assert "LogicalRDD" not in drv_plan
         # -1, not 0: an empty edge list must take the distributed loop too.
         with monkeypatch.context() as m:
             m.setattr(adaptive, "DRIVER_MAX_ROWS", -1)
-            dist = labels(nodes, edges)
+            dist_schema, dist, _ = labels(nodes, edges)
+        assert drv_schema == dist_schema
         assert drv == dist
     assert drv == [(f"x{i:04d}", f"x{i:04d}") for i in range(n)]

@@ -22,12 +22,17 @@ def _force(monkeypatch, value):
     monkeypatch.setattr(adaptive, "DRIVER_MAX_ROWS", value)
 
 
-def test_neighborhood_paths_agree(spark, edges, monkeypatch):
+def test_neighborhood_paths_agree(spark, edges, monkeypatch, optimized_plan):
     for start in ("a", "zz"):  # "zz" is not in the graph
         _force(monkeypatch, 10_000)
-        drv = sorted(map(tuple, neighborhood(edges, start, max_depth=3).collect()))
+        drv_df = neighborhood(edges, start, max_depth=3)
+        # the driver walk's rows re-enter as a LocalRelation
+        assert "LogicalRDD" not in optimized_plan(drv_df)
+        drv = sorted(map(tuple, drv_df.collect()))
         _force(monkeypatch, 0)
-        dist = sorted(map(tuple, neighborhood(edges, start, max_depth=3).collect()))
+        dist_df = neighborhood(edges, start, max_depth=3)
+        dist = sorted(map(tuple, dist_df.collect()))
+        assert drv_df.schema == dist_df.schema
         assert drv == dist
         assert bool(drv) == (start == "a")
 

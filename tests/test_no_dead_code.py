@@ -81,3 +81,34 @@ def test_operators_read_no_environment():
             if hit:
                 readers.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert not readers, f"operators reading the environment: {readers}"
+
+
+# (file, enclosing top-level function) -> why it may build a frame itself.
+LIST_FRAME_ALLOWED = {
+    ("dice_spark/operators/adaptive.py", "local_frame"): "the one Arrow entry point",
+    ("dice_spark/synth.py", "make_transcripts"): (
+        "test-data builder over caller-made rows with timestamps, not a driver path"
+    ),
+}
+
+
+def test_driver_rows_enter_through_local_frame():
+    """Driver rows become a DataFrame only through ``adaptive.local_frame``
+    (an Arrow-built LocalRelation). A ``createDataFrame(<list>)`` is a
+    LogicalRDD over a pickled PythonRDD whose every read forks Python
+    workers."""
+    calls = []
+    for entry in ("dice_spark", "__spark_entry__.py"):
+        for path in _py_files(entry):
+            rel = str(path.relative_to(ROOT))
+            for top in ast.parse(path.read_text(), filename=str(path)).body:
+                owner = getattr(top, "name", None)
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"
+                        and (rel, owner) not in LIST_FRAME_ALLOWED
+                    ):
+                        calls.append(f"{rel}:{node.lineno}")
+    assert not calls, f"createDataFrame outside adaptive.local_frame: {calls}"

@@ -6,6 +6,8 @@ Each case runs ``__spark_entry__.queries()[name]`` on Spark and
 compares column names, row count and the order-insensitive value digest of
 tools/selfcheck.py. The distributed cases set the shared ceiling to 0, so
 every CC / BFS / Datalog call inside the query runs its distributed loop.
+On the driver side, a query whose result is built from driver rows must
+plan it as a LocalRelation, never a LogicalRDD over pickled rows.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ GATED = [
     "prop_dup_clusters",
     "doc_dup_clusters",
 ]
+# The two CC queries join their driver labels into checkpointed relations
+# (LogicalRDDs of their own); tests/test_canonicalize.py checks the labels.
+DRIVER_RESULT = {"prolog_inference", "graph_neighborhood", "path_between"}
 
 
 def _sf_dir() -> str:
@@ -54,10 +59,14 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("path", ["driver", "distributed"])
 @pytest.mark.parametrize("name", GATED)
-def test_gated_query_matches_oracle(spark, duck, sf_dir, monkeypatch, name, path):
+def test_gated_query_matches_oracle(
+    spark, duck, sf_dir, monkeypatch, optimized_plan, name, path
+):
     if path == "distributed":
         monkeypatch.setattr(adaptive, "DRIVER_MAX_ROWS", 0)
     sdf = entry.queries()[name](spark, sf_dir)
+    if path == "driver" and name in DRIVER_RESULT:
+        assert "LogicalRDD" not in optimized_plan(sdf)
     scols = [c.lower() for c in sdf.columns]
     srows = [tuple(r) for r in sdf.collect()]
     res = duck.sql(entry.oracle_sql()[name])

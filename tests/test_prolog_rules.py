@@ -101,10 +101,11 @@ def test_unbound_head_variable_raises(spark):
         apply_rules(facts, bad)
 
 
-def test_driver_and_distributed_fixpoints_agree(spark, monkeypatch):
+def test_driver_and_distributed_fixpoints_agree(spark, monkeypatch, optimized_plan):
     """The driver dict-join fast path must produce the same tuple set AND
     schema as the distributed semi-naive loop on a branchy cyclic graph —
-    string node ids and bigint node ids alike."""
+    string node ids and bigint node ids alike — and its result must be a
+    LocalRelation, not a LogicalRDD over pickled rows."""
     import random
 
     rnd = random.Random(11)
@@ -118,6 +119,7 @@ def test_driver_and_distributed_fixpoints_agree(spark, monkeypatch):
         spark.createDataFrame(int_rows, "predicate string, x bigint, y bigint"),
     ):
         drv = apply_rules(facts)
+        assert "LogicalRDD" not in optimized_plan(drv)
         with monkeypatch.context() as m:
             m.setattr(adaptive, "DRIVER_MAX_ROWS", 0)
             dist = apply_rules(facts)
