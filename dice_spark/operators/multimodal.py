@@ -34,7 +34,7 @@ FEATURES_SCHEMA = (
 )
 
 
-def _stub_decode(kind: str, payload: bytes) -> list[float]:
+def _stub_decode(payload: bytes) -> list[float]:
     """Deterministic fake 'decode + feature extract'.
 
     Real deployments replace this with PIL/torchaudio decode + a model; kept
@@ -49,7 +49,7 @@ def _stub_decode(kind: str, payload: bytes) -> list[float]:
 DECODERS = {"image": _stub_decode, "audio": _stub_decode, "video": _stub_decode}
 
 
-def extract_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Per-row failure isolation: decode errors become quarantine-able rows
@@ -66,7 +66,7 @@ def extract_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
             for kind, payload in zip(pdf["kind"], pdf["payload"]):
                 try:
                     raw = bytes(payload) if payload is not None else None
-                    feats.append(DECODERS[kind](kind, raw))
+                    feats.append(DECODERS[kind](raw))
                     oks.append(True)
                     errs.append(None)
                 except Exception as e:  # noqa: BLE001 — quarantine, don't fail the task

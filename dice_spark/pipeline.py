@@ -126,7 +126,6 @@ def run_pipeline(
     min_confidence: float = DEFAULT_MIN_CONFIDENCE,
     processed_chunks: DataFrame | None = None,
     run_id: str = "run-0",
-    shuffle_partitions: int | None = None,
     spill_dir: str | None = None,
     perspective: str = "ALL",
     existing_props: DataFrame | None = None,

@@ -64,6 +64,33 @@ def test_every_library_function_is_referenced():
     assert not dead, f"unreferenced top-level functions: {dead}"
 
 
+def test_every_library_parameter_is_read():
+    """Every parameter of a ``dice_spark`` function (top-level, nested or
+    method; ``self``/``cls`` aside) is read somewhere in its body, nested
+    scopes included. An unread parameter is an option that silently does
+    nothing."""
+    unread = []
+    for path in _py_files("dice_spark"):
+        for fn in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            reads = {
+                n.id
+                for stmt in fn.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            unread += [
+                f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}({p})"
+                for p in params
+                if p not in ("self", "cls") and p not in reads
+            ]
+    assert not unread, f"parameters never read: {unread}"
+
+
 def test_operators_read_no_environment():
     """Operator behaviour is fixed by code, not by environment knobs: the one
     driver-or-distributed ceiling is ``adaptive.DRIVER_MAX_ROWS``. Deployment

@@ -12,8 +12,6 @@ plan it as a LocalRelation, never a LogicalRDD over pickled rows.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import duckdb
 import pytest
 
@@ -31,21 +29,6 @@ GATED = [
 # The two CC queries join their driver labels into checkpointed relations
 # (LogicalRDDs of their own); tests/test_canonicalize.py checks the labels.
 DRIVER_RESULT = {"prolog_inference", "graph_neighborhood", "path_between"}
-
-
-def _sf_dir() -> str:
-    """The sf0.001 set of the ``testdata`` directory beside the checkout (or
-    beside any of its ancestors)."""
-    for parent in Path(__file__).resolve().parents:
-        candidate = parent / "testdata" / "sf0.001"
-        if candidate.is_dir():
-            return str(candidate)
-    raise FileNotFoundError("no testdata/sf0.001 beside the checkout")
-
-
-@pytest.fixture(scope="module")
-def sf_dir():
-    return _sf_dir()
 
 
 @pytest.fixture(scope="module")
