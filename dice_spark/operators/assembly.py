@@ -130,8 +130,11 @@ def windowed_turns(
     shuffled; at scale the join degrades gracefully to a conv_id shuffle).
     Value-identity with the composition is pinned by
     tests/test_assembly_fused.py on the driver events data and the golden
-    fixtures; inputs that break the contract (sparse turn indexes,
-    multi-line turn text) must use the composition.
+    fixtures. A turn index outside [0, conv_len) — sparse or negative
+    indexes — fails the job: the arithmetic windows would name chunks that
+    assemble_windows never emits, and every proposition would be grounded in
+    a missing chunk. Multi-line turn text is not checked; such inputs must
+    use the composition.
     """
     stride = window_size - overlap
     t = F.col("turn_idx")
@@ -144,8 +147,17 @@ def windowed_turns(
     conv_len = transcripts.groupBy("conv_id").agg(
         F.count(F.lit(1)).cast("int").alias("_conv_len")
     )
+    # Checked before the sliver filter, so no out-of-range row escapes it; the
+    # length is already joined, so the check adds no aggregate and no action.
+    dense_idx = F.when(
+        (t < 0) | (t >= F.col("_conv_len")),
+        F.raise_error(
+            F.concat(F.lit("turn_idx is not dense 0-based in conv_id "), F.col("conv_id"))
+        ),
+    ).otherwise(t)
     exploded = (
         transcripts.join(conv_len, "conv_id")
+        .withColumn("turn_idx", dense_idx)
         .withColumn(
             "window_id",
             F.explode(F.when(in_prev, F.array(w0 - 1, w0)).otherwise(F.array(w0))),

@@ -43,8 +43,6 @@ from dice_spark.operators.linking import (
 def mention_nodes(
     mentions: DataFrame,
     context_id: str,
-    span_col: str = "span",
-    type_col: str = "entity_type",
     pre_counted: bool = False,
 ) -> DataFrame:
     """Distinct (type, norm_key) nodes with aggregated surface forms.
@@ -61,13 +59,9 @@ def mention_nodes(
     # once per mention occurrence (10^12 at design scale). Mirrors the
     # reference's MentionKey dedup-before-resolution.
     if pre_counted:
-        counted = mentions.select(
-            F.col(span_col).alias("span"), F.col(type_col).alias("entity_type"), "n"
-        )
+        counted = mentions.select("span", "entity_type", "n")
     else:
-        counted = mentions.groupBy(
-            F.col(span_col).alias("span"), F.col(type_col).alias("entity_type")
-        ).agg(F.count(F.lit(1)).alias("n"))
+        counted = mentions.groupBy("span", "entity_type").agg(F.count(F.lit(1)).alias("n"))
     prepared = counted.select(
         "span",
         "entity_type",
@@ -309,8 +303,6 @@ def canonical_entities(nodes: DataFrame, components: DataFrame) -> DataFrame:
 def canonicalize_mentions(
     mentions: DataFrame,
     context_id: str,
-    span_col: str = "span",
-    type_col: str = "entity_type",
     schema: DataFrame | None = None,
     pre_counted: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -335,11 +327,11 @@ def canonicalize_mentions(
             )
         )
         mentions = mentions.join(
-            closed, F.lower(F.col(type_col)) == F.col("_closed_type"), "left_anti"
+            closed, F.lower(F.col("entity_type")) == F.col("_closed_type"), "left_anti"
         )
-    nodes = mention_nodes(
-        mentions, context_id, span_col, type_col, pre_counted=pre_counted
-    ).localCheckpoint(eager=True)
+    nodes = mention_nodes(mentions, context_id, pre_counted=pre_counted).localCheckpoint(
+        eager=True
+    )
     # No width-probe action here: vocabulary-sized graphs take the driver
     # union-find inside connected_components (where the edge count is already
     # known), and above that ceiling AQE coalesces the loop's shuffles — the

@@ -7,20 +7,19 @@ dice-integration-tests/.../FixedPropositionExtractor.kt:41-67) and predicate
 matching is case-insensitive substring against the declared relation
 vocabulary, first declared match wins (RelationBasedGraphProjector.kt:292-325).
 
-This module implements that deterministic semantic two ways:
+This module implements that deterministic semantic once, as
+``extract_triples_udf``: the vectorized pandas/Arrow ``mapInPandas`` seam
+demanded by the north rule — batched mention detection + relation
+classification per partition, no per-row Python (pandas C-level str ops, one
+substring pass per relation in priority order). This is where a real
+LLM/model extractor plugs in. Its reference is the DuckDB oracle: the
+``extraction`` and ``extraction_perspective`` queries of ``__spark_entry__``
+recompute the same rows in SQL (tools/selfcheck.py).
 
-* ``extract_triples`` — pure Catalyst column expressions (broadcast join of
-  sentences x relations, first-match-wins via priority row_number). Used for
-  oracle parity; stays entirely inside whole-stage codegen.
-* ``extract_triples_udf`` — the vectorized pandas/Arrow ``mapInPandas`` seam
-  demanded by the north rule: batched mention detection + relation
-  classification per partition, no per-row Python (pandas C-level str ops,
-  one vectorized regex pass per relation). This is where a real LLM/model
-  extractor plugs in; both paths produce identical rows (tested).
-
-Scale notes: relations is a tiny broadcast; the sentence explode is map-side;
-nothing shuffles until the downstream proposition groupBy. The UDF receives
-Arrow batches (spark.sql.execution.arrow.maxRecordsPerBatch) per partition.
+Scale notes: the role scope and column pruning run JVM-side before the seam;
+the sentence explode is inside it; nothing shuffles until the downstream
+proposition groupBy. The UDF receives Arrow batches
+(spark.sql.execution.arrow.maxRecordsPerBatch) per partition.
 """
 
 from __future__ import annotations
@@ -29,9 +28,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from dice_spark.synth import ORGS, PROJECTS, RELATIONS
+from dice_spark.synth import ORGS, RELATIONS
 
 # Cap on per-proposition grounding/source id lists (rank-before-collect).
 MAX_GROUNDING = 100
@@ -95,7 +93,7 @@ def temporal_metadata_exprs(sentence, predicate) -> dict[str, "F.Column"]:
         "invalidated_at": F.lit(None).cast("timestamp"),
     }
 
-# Output schema of both extractors (one row per extracted triple candidate).
+# Output schema of the extractor (one row per extracted triple candidate).
 TRIPLES_SCHEMA = (
     "chunk_id string, conv_id string, turn_idx int, sentence string, "
     "predicate string, priority int, subj_span string, obj_span string, "
@@ -107,102 +105,16 @@ TRIPLES_SCHEMA = (
 _SENTENCE_SPLIT = r"(?<=\.)(?<![A-Z]\.)(?<!\bDr\.)(?<!\bMr\.)(?<!\bMs\.)(?<!\bMrs\.)(?<!\bProf\.)\s+"
 
 
-def entity_type_expr(span):
-    """Schema-guided mention typing: known org / project vocab, else Person.
-
-    Stands in for the reference's schema-hints prompt section
-    (resources/prompts/dice/schema_hints.jinja) that pins known entity types.
-    """
-    org = F.array(*[F.lit(o) for o in ORGS])
-    return (
-        F.when(F.array_contains(org, span), "Org")
-        .when(span.startswith("Project "), "Project")
-        .otherwise("Person")
-    )
-
-
-def _confidence_expr(sentence):
-    # Deterministic stand-in confidence rule: varies by content, range [0.5, 0.99].
-    return F.lit(0.5) + (F.length(sentence) % 50).cast("double") / 100.0
-
-
-def _decay_expr(subj):
-    return (F.length(subj) % 10).cast("double") / 10.0
-
-
-def sentences_from_turns(turns: DataFrame) -> DataFrame:
-    """Turn rows -> one row per sentence (keeps chunk/conv/turn keys)."""
-    return turns.select(
-        "chunk_id",
-        "conv_id",
-        "turn_idx",
-        F.explode(F.split(F.col("text"), _SENTENCE_SPLIT)).alias("sentence"),
-    ).filter(F.length(F.trim("sentence")) > 0)
-
-
-def extract_triples(
-    turns: DataFrame,
-    relations: DataFrame,
-    conf_overrides: dict | None = None,
-    perspective: str = "ALL",
-) -> DataFrame:
-    """Pure-DataFrame extractor: sentences x broadcast(relations) substring join.
-
-    ``conf_overrides`` optionally pins (confidence, decay) per exact sentence
-    text (the FixedPropositionExtractor pattern used by the golden fixtures).
-    ``perspective`` scopes extraction to a speaker role (ALL/USER/AGENT).
-    """
-    sents = sentences_from_turns(scope_to_perspective(turns, perspective))
-    joined = sents.join(
-        F.broadcast(relations),
-        F.instr(F.lower(F.col("sentence")), F.col("predicate")) > 0,
-        "inner",
-    )
-    # First declared relation wins (reference match priority).
-    first = Window.partitionBy("chunk_id", "turn_idx", "sentence").orderBy("priority")
-    matched = (
-        joined.withColumn("rn", F.row_number().over(first))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    pos = F.instr(F.lower(F.col("sentence")), F.col("predicate"))
-    subj = F.trim(F.substring(F.col("sentence"), F.lit(1), pos - 1))
-    after = F.substring(
-        F.col("sentence"), pos + F.length("predicate"), F.length("sentence")
-    )
-    obj = F.trim(F.regexp_replace(F.trim(after), r"\.$", ""))
-    out = matched.select(
-        "chunk_id",
-        "conv_id",
-        "turn_idx",
-        "sentence",
-        "predicate",
-        "priority",
-        subj.alias("subj_span"),
-        obj.alias("obj_span"),
-        entity_type_expr(subj).alias("subj_type"),
-        entity_type_expr(obj).alias("obj_type"),
-        _confidence_expr(F.col("sentence")).alias("confidence"),
-        _decay_expr(subj).alias("decay"),
-    )
-    if conf_overrides:
-        conf = F.col("confidence")
-        dec = F.col("decay")
-        for text, (c, d) in conf_overrides.items():
-            conf = F.when(F.col("sentence") == text, F.lit(float(c))).otherwise(conf)
-            dec = F.when(F.col("sentence") == text, F.lit(float(d))).otherwise(dec)
-        out = out.withColumn("confidence", conf).withColumn("decay", dec)
-    return out
-
-
 def extract_triples_udf(
     turns: DataFrame,
     conf_overrides: dict | None = None,
     perspective: str = "ALL",
 ) -> DataFrame:
-    """Vectorized mapInPandas extractor — identical semantics to extract_triples.
+    """Vectorized mapInPandas extractor: turn rows -> TRIPLES_SCHEMA rows.
 
-    Per Arrow batch: explode sentences, then one vectorized regex pass per
+    ``conf_overrides`` optionally pins (confidence, decay) per exact sentence
+    text (the FixedPropositionExtractor pattern used by the golden fixtures).
+    Per Arrow batch: explode sentences, then one vectorized substring pass per
     relation in priority order (first match wins). All pandas C-level ops.
     The ``perspective`` role scope is applied as a column predicate BEFORE the
     seam so the filter stays JVM-side and prunes Arrow transfer.
@@ -219,7 +131,6 @@ def extract_triples_udf(
     overrides = dict(conf_overrides or {})
     relations = list(RELATIONS)
     orgs = set(ORGS)
-    projects = tuple(PROJECTS)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:

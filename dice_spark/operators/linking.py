@@ -108,11 +108,11 @@ def default_bakeoff_scorer(pairs: DataFrame) -> DataFrame:
     )
 
 
-def prepare_mentions(mentions: DataFrame, span_col: str = "span", type_col: str = "entity_type") -> DataFrame:
-    """Attach normalization keys. ``mention_key`` identifies a surface form."""
-    return mentions.withColumn("norm_name", normalize_name(span_col)).withColumn(
-        "norm_key", norm_key(span_col)
-    ).withColumn("type_key", F.lower(F.col(type_col)))
+def prepare_mentions(mentions: DataFrame) -> DataFrame:
+    """Attach normalization keys to (span, entity_type) mention rows."""
+    return mentions.withColumn("norm_name", normalize_name("span")).withColumn(
+        "norm_key", norm_key("span")
+    ).withColumn("type_key", F.lower(F.col("entity_type")))
 
 
 def _exactly_one(df: DataFrame, mention_cols: list[str], tier: str) -> DataFrame:

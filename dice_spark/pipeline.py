@@ -6,14 +6,14 @@ SURVEY.md §3.1):
   transcripts
     -> assemble_windows        (one shuffle on conv_id)
     -> [anti-join processed_chunks checkpoint]         (resume)
-    -> split_turns -> extract  (broadcast relations / mapInPandas seam)
+    -> split_turns -> extract_triples_udf  (mapInPandas / Arrow seam)
     -> gated_vocabulary -> canonicalize (mention gate, blocking joins + CC)
     -> propositions (exact-text dedup/merge per context) -> resolve_ids
     -> classify_projection -> edges + projection_records (lineage)
 
-The named stages (extract, triple_mentions, gated_vocabulary, canonicalize,
-resolve_ids) are the one composition shared by the batch pipeline, the
-entity-only variant, the streaming sink and the driver queries.
+The named stages (extract_triples_udf, triple_mentions, gated_vocabulary,
+canonicalize, resolve_ids) are the one composition shared by the batch
+pipeline, the entity-only variant, the streaming sink and the driver queries.
 """
 
 from __future__ import annotations
@@ -25,11 +25,7 @@ from dice_spark.functions.normalize import norm_key
 from dice_spark.operators import mention_filter
 from dice_spark.operators.assembly import assemble_windows, split_turns, windowed_turns
 from dice_spark.operators.canonicalize import canonicalize_mentions
-from dice_spark.operators.extraction import (
-    extract_triples,
-    extract_triples_udf,
-    triples_to_propositions,
-)
+from dice_spark.operators.extraction import extract_triples_udf, triples_to_propositions
 from dice_spark.operators.projection import (
     DEFAULT_MIN_CONFIDENCE,
     classify_projection,
@@ -37,20 +33,6 @@ from dice_spark.operators.projection import (
     projection_records,
 )
 from dice_spark.synth import relations_df
-
-
-def extract(
-    turns: DataFrame,
-    relations: DataFrame,
-    conf_overrides: dict | None = None,
-    use_udf_extractor: bool = True,
-    perspective: str = "ALL",
-) -> DataFrame:
-    """Turns -> triples through the mapInPandas extractor seam, or the
-    broadcast-relations join when ``use_udf_extractor`` is False."""
-    if use_udf_extractor:
-        return extract_triples_udf(turns, conf_overrides, perspective=perspective)
-    return extract_triples(turns, relations, conf_overrides, perspective=perspective)
 
 
 def triple_mentions(triples: DataFrame) -> DataFrame:
@@ -84,14 +66,12 @@ def gated_vocabulary(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def canonicalize(
-    triples: DataFrame, context_id: str, schema: DataFrame | None = None
+    triples: DataFrame, context_id: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Triples -> (entities, mention->entity mapping, rejected mentions):
     the gated vocabulary through blocking joins + connected components."""
     vocabulary, rejected = gated_vocabulary(triples)
-    entities, mapping = canonicalize_mentions(
-        vocabulary, context_id, schema=schema, pre_counted=True
-    )
+    entities, mapping = canonicalize_mentions(vocabulary, context_id, pre_counted=True)
     return entities, mapping, rejected
 
 
@@ -120,7 +100,6 @@ def resolve_ids(props: DataFrame, mapping: DataFrame) -> DataFrame:
 def run_pipeline(
     transcripts: DataFrame,
     context_id: str = "default",
-    relations: DataFrame | None = None,
     conf_overrides: dict | None = None,
     use_udf_extractor: bool = True,
     min_confidence: float = DEFAULT_MIN_CONFIDENCE,
@@ -128,10 +107,8 @@ def run_pipeline(
     run_id: str = "run-0",
     spill_dir: str | None = None,
     perspective: str = "ALL",
-    existing_props: DataFrame | None = None,
     existing_edges: DataFrame | None = None,
     existing_entities: DataFrame | None = None,
-    schema: DataFrame | None = None,
     additional_grounding: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """spill_dir: when set, shared intermediates (extraction output) are
@@ -139,7 +116,13 @@ def run_pipeline(
     localCheckpoint — columnar on disk, no executor-memory footprint. This is
     the multi-executor-cluster shape (stage outputs written to shared storage);
     in local mode it lifts the single-JVM block-manager ceiling at 10M+ turns.
+
+    use_udf_extractor: accepted only as True. Extraction has one
+    implementation, the mapInPandas seam (extract_triples_udf); the keyword
+    stays because bench.py passes it.
     """
+    if not use_udf_extractor:
+        raise ValueError("use_udf_extractor must be True: extract_triples_udf is the only extractor")
     chunks = assemble_windows(transcripts)
     turns = None
     if processed_chunks is not None:
@@ -162,17 +145,13 @@ def run_pipeline(
         chunks,
         turns=turns,
         context_id=context_id,
-        relations=relations,
         conf_overrides=conf_overrides,
-        use_udf_extractor=use_udf_extractor,
         min_confidence=min_confidence,
         run_id=run_id,
         spill_dir=spill_dir,
         perspective=perspective,
-        existing_props=existing_props,
         existing_edges=existing_edges,
         existing_entities=existing_entities,
-        schema=schema,
         additional_grounding=additional_grounding,
     )
 
@@ -181,17 +160,13 @@ def process_chunks(
     chunks: DataFrame,
     turns: DataFrame | None = None,
     context_id: str = "default",
-    relations: DataFrame | None = None,
     conf_overrides: dict | None = None,
-    use_udf_extractor: bool = True,
     min_confidence: float = DEFAULT_MIN_CONFIDENCE,
     run_id: str = "run-0",
     spill_dir: str | None = None,
     perspective: str = "ALL",
-    existing_props: DataFrame | None = None,
     existing_edges: DataFrame | None = None,
     existing_entities: DataFrame | None = None,
-    schema: DataFrame | None = None,
     additional_grounding: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Assembled chunks -> the full downstream stage graph.
@@ -201,7 +176,6 @@ def process_chunks(
     which assembles its own incremental windows per micro-batch.
     """
     spark = chunks.sparkSession
-    relations = relations if relations is not None else relations_df(spark)
 
     def _materialize(df: DataFrame, name: str) -> DataFrame:
         if spill_dir is None:
@@ -223,7 +197,7 @@ def process_chunks(
     if turns is None:
         turns = split_turns(chunks)
 
-    raw_triples = extract(turns, relations, conf_overrides, use_udf_extractor, perspective)
+    raw_triples = extract_triples_udf(turns, conf_overrides, perspective=perspective)
     chunk_meta_src = chunks.select("chunk_id", "content_hash")
     if spill_dir is not None:
         # The two spill writes are INDEPENDENT jobs (the meta branch renders
@@ -244,11 +218,7 @@ def process_chunks(
         # proposition branch — materialize once.
         triples = _materialize(raw_triples, "triples")
 
-    # schema: optional (entity_type, creation_permitted) — closed types are
-    # vetoed from entity minting (EscalatingEntityResolver.kt:224-237);
-    # their propositions keep NULL subj/obj ids and the projection gate
-    # drops those edges downstream.
-    entities, mapping, rejected_mentions = canonicalize(triples, context_id, schema=schema)
+    entities, mapping, rejected_mentions = canonicalize(triples, context_id)
 
     props = triples_to_propositions(triples, context_id)
     # Provenance stamp (PropositionPipeline.stampProvenance): every
@@ -269,7 +239,7 @@ def process_chunks(
     props = with_additional_grounding(props, additional_grounding)
     props = resolve_ids(props, mapping)
 
-    classified = classify_projection(props, relations, min_confidence)
+    classified = classify_projection(props, relations_df(spark), min_confidence)
     edges = project_edges(classified)
     if existing_edges is not None:
         # Reconcile against the durable graph: an edge_ref already in the
@@ -278,16 +248,6 @@ def process_chunks(
 
         edges = reconcile_edges(edges, existing_edges)
     records = projection_records(classified, run_id)
-
-    # Revision stage (reference write path, PropositionPipeline.kt:254-281):
-    # when an existing store is supplied, the incoming batch is revised
-    # against it — merge / reinforce / contradict per LlmPropositionReviser —
-    # and the revised store is the durable output alongside this batch's graph.
-    revision = None
-    if existing_props is not None:
-        from dice_spark.operators.revision import revise_batch
-
-        revision = revise_batch(existing_props, props)
 
     # Per-batch change contract (KnowledgeGraphDelta.kt:27-69): what this
     # batch adds vs merges into the durable store. Lazy — no extra action.
@@ -302,7 +262,6 @@ def process_chunks(
     )
 
     result = {
-        **({"revision": revision} if revision is not None else {}),
         "delta": delta,
         "rejected_mentions": rejected_mentions,
         "chunks": chunks,
@@ -319,18 +278,14 @@ def process_chunks(
 
 
 def run_entity_pipeline(
-    transcripts: DataFrame,
-    context_id: str = "default",
-    conf_overrides: dict | None = None,
-    use_udf_extractor: bool = True,
+    transcripts: DataFrame, context_id: str = "default"
 ) -> dict[str, DataFrame]:
     """Entity-only variant of the pipeline (EntityPipeline,
     /root/reference/dice/src/main/kotlin/com/embabel/dice/entity/
     EntityPipeline.kt:46): extract mentions, filter junk spans, canonicalize —
     no propositions, no projection. Returns entities + the mention->entity
     mapping + rejected mentions."""
-    relations = relations_df(transcripts.sparkSession)
-    triples = extract(windowed_turns(transcripts), relations, conf_overrides, use_udf_extractor)
+    triples = extract_triples_udf(windowed_turns(transcripts))
     entities, mapping, rejected = canonicalize(triples.localCheckpoint(eager=False), context_id)
     return {
         "entities": entities,

@@ -22,9 +22,14 @@ Structured Streaming:
 Scale notes: each micro-batch prunes the durable turns table to the
 conversations present in the batch (left-semi join on conv_id) before
 windowing, so per-batch work is O(affected conversations), not O(history).
-Entity identity is stable across batches because node ids are
-content-derived (context|type|norm_key); cross-batch cluster refinement is
-the consolidation pass's job, as in the reference's dream loop.
+
+Limitation: each micro-batch canonicalizes only its own vocabulary, so an
+``entity_id`` is the minimum node id of a batch-local component. Node ids are
+content-derived (context|type|norm_key), so the same surface form maps to the
+same node in every batch, but a merge that only a later batch reveals (say
+"Alice" joining "Alice Smith") is not applied to ids already stored: no code
+rewrites a stored ``entity_id``, and a batch run over the same turns can
+assign different ids than the stream did.
 """
 
 from __future__ import annotations
@@ -33,11 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dice_spark.operators.adaptive import local_frame
-from dice_spark.operators.assembly import (
-    OVERLAP_SIZE,
-    TRIGGER_INTERVAL,
-    WINDOW_SIZE,
-)
+from dice_spark.operators.assembly import TRIGGER_INTERVAL
 from dice_spark.pipeline import process_chunks
 from dice_spark.storage import Warehouse
 from dice_spark.streaming.incremental import assemble_triggered, triggered_windows
@@ -194,28 +195,12 @@ class StreamingPipeline:
         spark: SparkSession,
         warehouse_root: str,
         context_id: str = "stream",
-        window_size: int = WINDOW_SIZE,
-        overlap: int = OVERLAP_SIZE,
         trigger: int = TRIGGER_INTERVAL,
-        use_udf_extractor: bool = True,
-        perspective: str = "ALL",
-        additional_grounding: list[str] | None = None,
     ):
-        if overlap >= window_size:
-            # the drain loop's termination proof needs a positive stride
-            raise ValueError(f"overlap {overlap} must be < window_size {window_size}")
         self.spark = spark
         self.wh = Warehouse(warehouse_root, spark)
         self.context_id = context_id
-        self.window_size = window_size
-        self.overlap = overlap
         self.trigger = trigger
-        self.use_udf_extractor = use_udf_extractor
-        self.perspective = perspective
-        # rememberText's additionalGrounding: extra source-record ids merged
-        # into every proposition this stream persists (e.g. the connector
-        # feed id behind the stream).
-        self.additional_grounding = additional_grounding
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         wh = self.wh
@@ -242,13 +227,8 @@ class StreamingPipeline:
         # run_pipeline (tests/test_streaming.py parity test).
         win_parts: list[DataFrame] = []
         while True:
-            wins = triggered_windows(
-                active,
-                bookmarks,
-                window_size=self.window_size,
-                overlap=self.overlap,
-                trigger=self.trigger,
-            ).localCheckpoint(eager=True)  # tiny: one row per triggered conv
+            wins = triggered_windows(active, bookmarks, trigger=self.trigger)
+            wins = wins.localCheckpoint(eager=True)  # tiny: one row per triggered conv
             if wins.count() == 0:
                 break
             win_parts.append(wins)
@@ -275,14 +255,7 @@ class StreamingPipeline:
             )
             return
         run_id = f"batch-{batch_id}"
-        out = process_chunks(
-            chunks,
-            context_id=self.context_id,
-            use_udf_extractor=self.use_udf_extractor,
-            run_id=run_id,
-            perspective=self.perspective,
-            additional_grounding=self.additional_grounding,
-        )
+        out = process_chunks(chunks, context_id=self.context_id, run_id=run_id)
         # One computation serves both the event emission and the MERGEs:
         # the events must be derived against the PRE-merge store (a lazy
         # anti-join would re-read the table after the merge overwrote it and

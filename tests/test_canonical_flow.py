@@ -14,15 +14,11 @@ from dice_spark.pipeline import run_pipeline
 from dice_spark.synth import CANONICAL_FLOW_CONF, canonical_flow_rows, make_transcripts
 
 
-@pytest.fixture(scope="module", params=[True, False], ids=["udf", "expr"])
-def result(request, spark):
+# One case, named after the extractor it runs (the mapInPandas seam).
+@pytest.fixture(scope="module", params=["udf"])
+def result(spark):
     transcripts = make_transcripts(spark, canonical_flow_rows())
-    out = run_pipeline(
-        transcripts,
-        context_id="canonical",
-        conf_overrides=CANONICAL_FLOW_CONF,
-        use_udf_extractor=request.param,
-    )
+    out = run_pipeline(transcripts, context_id="canonical", conf_overrides=CANONICAL_FLOW_CONF)
     cached = {k: v.cache() for k, v in out.items() if k != "delta"}
     yield cached
     for v in cached.values():
@@ -66,6 +62,12 @@ def test_propositions_active_level0(result):
     assert len(props) == 3
     assert all(p["status"] == "ACTIVE" and p["level"] == 0 for p in props)
     assert all(p["reinforce_count"] == 0 for p in props)
+
+
+def test_only_the_udf_extractor_is_accepted(spark):
+    transcripts = make_transcripts(spark, canonical_flow_rows())
+    with pytest.raises(ValueError, match="use_udf_extractor"):
+        run_pipeline(transcripts, use_udf_extractor=False)
 
 
 def test_entity_pipeline_variant(spark):

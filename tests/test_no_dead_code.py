@@ -91,6 +91,68 @@ def test_every_library_parameter_is_read():
     assert not unread, f"parameters never read: {unread}"
 
 
+# Public pipeline entry points: name -> (defining module, the def's path in it).
+ENTRY_POINTS = {
+    "run_pipeline": ("dice_spark/pipeline.py", ["run_pipeline"]),
+    "run_entity_pipeline": ("dice_spark/pipeline.py", ["run_entity_pipeline"]),
+    "StreamingPipeline": ("dice_spark/streaming/stream.py", ["StreamingPipeline", "__init__"]),
+}
+
+
+def _find_def(path: str, qualname: list[str]) -> ast.FunctionDef:
+    body = ast.parse((ROOT / path).read_text()).body
+    for name in qualname:
+        node = next(n for n in body if getattr(n, "name", None) == name)
+        body = getattr(node, "body", [])
+    return node
+
+
+def _param_names(fn: ast.FunctionDef) -> list[str]:
+    a = fn.args
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs if p.arg not in ("self", "cls")]
+
+
+def test_every_entry_point_option_is_passed_by_a_caller():
+    """Every parameter of ``run_pipeline``, ``run_entity_pipeline`` and
+    ``StreamingPipeline`` is passed, by name or by position, at a call site
+    outside the entry point's own module. An option that no caller sets is a
+    code path that nothing runs."""
+    passed: dict[str, set[str]] = {entry: set() for entry in ENTRY_POINTS}
+    params = {entry: _param_names(_find_def(*where)) for entry, where in ENTRY_POINTS.items()}
+    for entry_dir in SEARCHED:
+        for path in _py_files(entry_dir):
+            rel = str(path.relative_to(ROOT))
+            tree = ast.parse(path.read_text(), filename=rel)
+            aliases = {entry: entry for entry in ENTRY_POINTS if ENTRY_POINTS[entry][0] != rel}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom):
+                    for a in node.names:
+                        if a.name in aliases and a.asname:
+                            aliases[a.asname] = a.name
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                called = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                entry = aliases.get(called)
+                if entry is None:
+                    continue
+                n_pos = sum(not isinstance(a, ast.Starred) for a in node.args)
+                passed[entry] |= set(params[entry][:n_pos])
+                passed[entry] |= {k.arg for k in node.keywords if k.arg is not None}
+    unset = [f"{e}({p})" for e in ENTRY_POINTS for p in params[e] if p not in passed[e]]
+    assert not unset, f"entry-point parameters no caller passes: {unset}"
+
+
+def test_process_chunks_takes_only_run_pipeline_options():
+    """The streaming sink's entry (``process_chunks``) has no option of its own
+    beyond its inputs: every other parameter is also a ``run_pipeline`` one."""
+    run = set(_param_names(_find_def("dice_spark/pipeline.py", ["run_pipeline"])))
+    chunks = _param_names(_find_def("dice_spark/pipeline.py", ["process_chunks"]))
+    extra = [p for p in chunks if p not in ("chunks", "turns") and p not in run]
+    assert not extra, f"process_chunks parameters run_pipeline lacks: {extra}"
+
+
 def test_operators_read_no_environment():
     """Operator behaviour is fixed by code, not by environment knobs: the one
     driver-or-distributed ceiling is ``adaptive.DRIVER_MAX_ROWS``. Deployment

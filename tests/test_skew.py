@@ -51,7 +51,7 @@ def test_skewed_pipeline_end_to_end(spark):
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     tr = skewed_transcripts_from_events(events).localCheckpoint(eager=True)
-    out = run_pipeline(tr, context_id="skew", use_udf_extractor=True)
+    out = run_pipeline(tr, context_id="skew")
     ents = out["entities"].cache()
     head = ents.filter(F.col("canonical_name") == "Primary User").collect()
     assert len(head) == 1

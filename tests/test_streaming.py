@@ -136,7 +136,7 @@ def test_stream_batch_value_parity(spark, dirs, tmp_path):
         .select("conv_id", "turn_idx", "role", "text")
         .localCheckpoint(eager=True)
     )
-    batch = run_pipeline(tr, context_id="par", use_udf_extractor=True)
+    batch = run_pipeline(tr, context_id="par")
 
     sp = StreamingPipeline(spark, str(tmp_path / "wh_par"), context_id="par", trigger=1)
     for i in (0, 1, 2):

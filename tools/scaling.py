@@ -133,9 +133,7 @@ def measure(cores: int) -> dict:
     warm = transcripts.filter(F.pmod(F.xxhash64("conv_id"), F.lit(100)) == 0).repartition(
         cores * 2, "conv_id"
     )
-    _rp(warm, context_id="warmup", use_udf_extractor=True, spill_dir=f"{spill}_warm")[
-        "edges"
-    ].count()
+    _rp(warm, context_id="warmup", spill_dir=f"{spill}_warm")["edges"].count()
     shutil.rmtree(f"{spill}_warm", ignore_errors=True)
     t0 = time.time()
     if STAGE == "extract":
@@ -145,9 +143,7 @@ def measure(cores: int) -> dict:
         turns = split_turns(assemble_windows(transcripts))
         n_out = extract_triples_udf(turns).count()
     else:
-        out = run_pipeline(
-            transcripts, context_id="scaling", use_udf_extractor=True, spill_dir=spill
-        )
+        out = run_pipeline(transcripts, context_id="scaling", spill_dir=spill)
         n_out = out["edges"].count()
     elapsed = time.time() - t0
     spark.stop()
